@@ -59,7 +59,10 @@ def main(argv: list[str] | None = None) -> int:
                    help="stable output bucket count (restart granularity)")
     p.add_argument("--shuffle-partitions", type=int, default=256)
     p.add_argument("--no-resume", action="store_true",
-                   help="ignore existing lineage (full re-run)")
+                   help="ignore existing lineage (full re-run). Needed "
+                        "for outputs written before commit bf05cbd, "
+                        "which changed the split seed and so the split "
+                        "assignment: resuming one would mix both")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession, functions as F

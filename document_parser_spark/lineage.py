@@ -6,18 +6,25 @@ Model
 -----
 Output is bucketed into ``n_partitions`` stable buckets by
 ``pmod(xxhash64(doc_id), n)`` — a pure function of doc_id, so the
-bucket assignment is identical across runs and cluster sizes. Each
-bucket commits independently:
+bucket assignment is identical across runs and cluster sizes:
 
-    out_dir/part_bucket=<b>/*.parquet     (data, atomic via write-then-rename)
-    out_dir/_lineage/bucket=<b>.parquet   (one lineage row per bucket)
+    out_dir/part_bucket=<b>/*.parquet     (data)
+    out_dir/_lineage/bucket=<b>.json      (one lineage row per bucket)
 
 A lineage row carries the same status vocabulary as the reference's
 webhook task store (webhook_manager/schemas.py:7-13): READY means the
-bucket's data files are fully written. Restart = anti-join the bucket
-list against READY lineage rows and process only the remainder; a
-bucket is re-written wholesale (idempotent — doc->bucket mapping is
-deterministic), never appended.
+bucket's data files are fully written. A commit is one partitioned
+write of every non-READY bucket into ``out_dir/_tmp``, one aggregate
+over the written files for every bucket's lineage tallies, then per
+bucket: drop the old data dir, rename the ``_tmp`` dir into place,
+write the lineage row last. A bucket is re-written wholesale
+(idempotent — doc->bucket mapping is deterministic), never appended.
+
+Restart = every bucket without a READY row, and only those are
+recomputed. The unit of loss is the run, not the bucket: a crash
+during the single write loses all of that run's uncommitted buckets,
+while a crash during the renames keeps the buckets whose lineage row
+landed.
 
 This replaces the reference's crash-unsafe task store (a crashed task
 stays PROCESSING forever, translator/v2/service.py:50-167) with a
@@ -31,6 +38,7 @@ schema and semantics.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -58,127 +66,108 @@ def _lineage_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_lineage")
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    d = _lineage_dir(out_dir)
-    files = [f for f in (os.listdir(d) if os.path.isdir(d) else [])
-             if f.endswith(".json")]
-    if not files:
-        return None
-    rows = []
-    for f in sorted(files):
-        with open(os.path.join(d, f), encoding="utf-8") as fh:
-            rows.append(json.load(fh))
-    return spark.createDataFrame(
-        rows, schema=("partition_id int, status string, "
-                      "input_files array<string>, span_count long, "
-                      "parse_failures long, updated_at double"))
+def _bucket_dir(root: str, bucket: int) -> str:
+    return os.path.join(root, f"{BUCKET_COL}={bucket}")
 
 
 def ready_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    lin = read_lineage(spark, out_dir)
-    if lin is None:
-        return set()
-    return {r.partition_id for r in
-            lin.filter(F.col("status") == LINEAGE_READY)
-               .select("partition_id").collect()}
+    """Buckets with a READY lineage row (read on the driver: one small
+    JSON file per bucket, no Spark job)."""
+    d = _lineage_dir(out_dir)
+    ready = set()
+    for f in glob.glob(os.path.join(d, "*.json")):
+        with open(f, encoding="utf-8") as fh:
+            row = json.load(fh)
+        if row["status"] == LINEAGE_READY:
+            ready.add(row["partition_id"])
+    return ready
 
 
 def remaining_buckets(spark: SparkSession, out_dir: str,
                       n_partitions: int) -> list[int]:
-    """All buckets LEFT ANTI JOIN lineage READY rows (SURVEY §2.3)."""
-    all_b = spark.range(n_partitions).select(
-        F.col("id").cast("int").alias("partition_id"))
-    lin = read_lineage(spark, out_dir)
-    if lin is None:
-        rem = all_b
-    else:
-        rem = all_b.join(
-            lin.filter(F.col("status") == LINEAGE_READY)
-               .select("partition_id"),
-            "partition_id", "left_anti")
-    return sorted(r.partition_id for r in rem.collect())
+    """All buckets minus the READY ones (the anti join of SURVEY §2.3)."""
+    ready = ready_buckets(spark, out_dir)
+    return [b for b in range(n_partitions) if b not in ready]
 
 
-def _commit_bucket(spark: SparkSession, bucket_df: DataFrame, out_dir: str,
-                   bucket: int, input_files: list[str]) -> dict:
-    """Write one bucket's data then its lineage row. Crash between the
-    two leaves the bucket non-READY -> rewritten on restart (idempotent:
-    the data write is an overwrite of the bucket directory).
+def _fill_empty(spark: SparkSession, schema, tmp: str,
+                buckets: list[int]) -> None:
+    """Give buckets that received no rows a schema-only data file, so
+    every READY bucket has its directory and an all-empty output still
+    reads back with its schema."""
+    empty = os.path.join(tmp, "_empty")
+    spark.createDataFrame([], schema).write.mode("overwrite").parquet(empty)
+    src = glob.glob(os.path.join(empty, "*.parquet"))[0]
+    for b in buckets:
+        os.makedirs(_bucket_dir(tmp, b))
+        shutil.copy(src, _bucket_dir(tmp, b))
 
-    The in-progress write lands under ``out_dir/_tmp`` — deliberately
-    OUTSIDE the ``part_bucket=*`` glob namespace ``read_output`` scans,
-    so a crash between the data write and the rename can never leak
-    partial/duplicate rows into a post-crash read (and can never turn
-    the inferred partition column into a string via a
-    ``part_bucket=<b>.inprogress`` directory name)."""
-    data_dir = os.path.join(out_dir, f"{BUCKET_COL}={bucket}")
-    tmp_dir = os.path.join(out_dir, "_tmp", f"bucket={bucket}")
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    os.makedirs(os.path.dirname(tmp_dir), exist_ok=True)
 
-    # extraction output carries (spans, status); other relations (e.g.
-    # the curation pipeline's curated-corpus rows) commit through the
-    # same machinery with zeroed span/failure tallies
-    span_count = (F.coalesce(F.sum(F.size("spans")), F.lit(0))
-                  if "spans" in bucket_df.columns else F.lit(0))
-    failures = (F.coalesce(
-        F.sum((F.col("status") == STATUS_PARSE_FAILURE).cast("long")),
-        F.lit(0)) if "status" in bucket_df.columns else F.lit(0))
-    stats = bucket_df.select(
-        span_count.cast("long").alias("span_count"),
-        failures.cast("long").alias("parse_failures"),
-        F.count("*").alias("n_docs"),
-    )
-    bucket_df.write.mode("overwrite").parquet(tmp_dir)
-    row = stats.collect()[0]
-    shutil.rmtree(data_dir, ignore_errors=True)
-    os.replace(tmp_dir, data_dir)  # atomic on POSIX
-
-    lineage_row = {
-        "partition_id": bucket,
-        "status": LINEAGE_READY,
-        "input_files": input_files,
-        "span_count": int(row.span_count),
-        "parse_failures": int(row.parse_failures),
-        "updated_at": time.time(),
-    }
-    os.makedirs(_lineage_dir(out_dir), exist_ok=True)
-    lpath = os.path.join(_lineage_dir(out_dir), f"bucket={bucket}.json")
-    with open(lpath + ".tmp", "w", encoding="utf-8") as fh:
-        json.dump(lineage_row, fh)
-    os.replace(lpath + ".tmp", lpath)
-    return lineage_row
+def _bucket_stats(spark: SparkSession, tmp: str,
+                  schema) -> dict[int, tuple]:
+    """(span_count, parse_failures) per bucket from the written files.
+    Extraction output carries (spans, status); other relations (e.g. the
+    curation pipeline's curated-corpus rows) commit through the same
+    machinery with zeroed tallies. The known schema spares Spark the
+    footer-reading job of schema inference."""
+    df = spark.read.schema(schema).parquet(tmp)
+    zero = F.lit(0).cast("long")
+    # size(spans.offset): nested pruning reads one int leaf, not spans
+    spans = (F.sum(F.size("spans.offset")) if "spans" in df.columns
+             else zero)
+    failures = (F.sum((F.col("status") == STATUS_PARSE_FAILURE)
+                      .cast("long")) if "status" in df.columns else zero)
+    return {r[0]: (int(r[1] or 0), int(r[2] or 0)) for r in
+            df.groupBy(BUCKET_COL).agg(spans, failures).collect()}
 
 
 def run_with_lineage(spark: SparkSession, result: DataFrame, out_dir: str,
                      n_partitions: int = DEFAULT_OUTPUT_PARTITIONS,
-                     input_files: list[str] | None = None,
-                     group_size: int = 8) -> list[dict]:
-    """Write ``result`` (must carry doc_id, spans, status) bucketed with
-    per-bucket lineage, skipping READY buckets from a previous run.
+                     input_files: list[str] | None = None) -> list[dict]:
+    """Write ``result`` (must carry doc_id; spans and status feed the
+    lineage tallies) bucketed with per-bucket lineage, skipping READY
+    buckets from a previous run.
 
-    Buckets are committed in groups of ``group_size`` (one Spark job
-    per group, predicate-pushdown on the bucket column) — a middle
-    ground between one-job-per-bucket (restart granularity 1, high
-    scheduling overhead) and all-at-once (no checkpoints). At cluster
-    scale group_size ~ executors*cores/bucket-cost.
-    """
-    os.makedirs(out_dir, exist_ok=True)
-    bucketed = with_bucket(result, n_partitions).persist()
-    try:
-        todo = remaining_buckets(spark, out_dir, n_partitions)
-        done: list[dict] = []
-        for i in range(0, len(todo), group_size):
-            group = todo[i:i + group_size]
-            group_df = bucketed.filter(F.col(BUCKET_COL).isin(group))
-            for b in group:
-                done.append(_commit_bucket(
-                    spark, group_df.filter(F.col(BUCKET_COL) == b)
-                    .drop(BUCKET_COL),
-                    out_dir, b, input_files or []))
-        return done
-    finally:
-        bucketed.unpersist()
+    The in-progress write lands under ``out_dir/_tmp`` — deliberately
+    OUTSIDE the ``part_bucket=*`` glob ``read_output`` scans, so a crash
+    before a bucket's rename can never leak partial/duplicate rows into
+    a post-crash read. A crash between a bucket's rename and its
+    lineage row leaves it non-READY, so the restart rewrites it."""
+    todo = remaining_buckets(spark, out_dir, n_partitions)
+    if not todo:
+        return []
+    tmp = os.path.join(out_dir, "_tmp")
+    bucketed = with_bucket(result, n_partitions)
+    if len(todo) < n_partitions:
+        bucketed = bucketed.filter(F.col(BUCKET_COL).isin(todo))
+    bucketed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
+    empty = [b for b in todo if not os.path.isdir(_bucket_dir(tmp, b))]
+    if empty:
+        _fill_empty(spark, result.schema, tmp, empty)
+    stats = _bucket_stats(spark, tmp, bucketed.schema)
+
+    os.makedirs(_lineage_dir(out_dir), exist_ok=True)
+    done = []
+    for b in todo:
+        data_dir = _bucket_dir(out_dir, b)
+        shutil.rmtree(data_dir, ignore_errors=True)
+        os.replace(_bucket_dir(tmp, b), data_dir)  # atomic on POSIX
+        span_count, parse_failures = stats.get(b, (0, 0))
+        row = {
+            "partition_id": b,
+            "status": LINEAGE_READY,
+            "input_files": input_files or [],
+            "span_count": span_count,
+            "parse_failures": parse_failures,
+            "updated_at": time.time(),
+        }
+        lpath = os.path.join(_lineage_dir(out_dir), f"bucket={b}.json")
+        with open(lpath + ".tmp", "w", encoding="utf-8") as fh:
+            json.dump(row, fh)
+        os.replace(lpath + ".tmp", lpath)
+        done.append(row)
+    shutil.rmtree(tmp, ignore_errors=True)
+    return done
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -220,14 +220,14 @@ def knn_bruteforce_pandas(emb: DataFrame, query: list[float],
             M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             norms = np.maximum(np.linalg.norm(M, axis=1), 1e-12)
             sims = (M @ qv) / norms
-            # tie-break by vec_id so the per-partition cut agrees with
-            # the global (sim desc, vec_id asc) comparator — a bare
-            # argsort keeps ties in array-position order and can drop
-            # the row the global top-k would have kept (duplicate
-            # embeddings straddling the k boundary)
+            # cut on the global merge's key, (sim rounded to 3 places
+            # desc, vec_id asc): any other order can drop, at a tie or
+            # a near-tie that rounds equal, the row the global top-k
+            # keeps
+            sims = np.round(sims, 3)
             top = np.lexsort((pdf["vec_id"].values, -sims))[:k]
             yield pd.DataFrame({"vec_id": pdf["vec_id"].iloc[top].values,
-                                "sim": np.round(sims[top], 3)})
+                                "sim": sims[top]})
 
     partial = emb.select("vec_id", "embedding").mapInPandas(
         score, schema="vec_id bigint, sim double")

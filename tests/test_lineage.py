@@ -105,3 +105,129 @@ def test_crash_leftover_tmp_dir_invisible_to_read_output(spark, result,
     got = lin.read_output(spark, out_dir)
     assert got.count() == clean                      # no duplicated rows
     assert dict(got.dtypes)[lin.BUCKET_COL] == "int"  # type not poisoned
+
+
+def test_empty_result_reads_back_with_schema(spark, result, out_dir):
+    """Committing an empty relation still makes every bucket READY with
+    its data directory, and read_output returns 0 rows with the output
+    schema instead of failing to infer one."""
+    done = lin.run_with_lineage(spark, result.limit(0), out_dir,
+                                n_partitions=4)
+    assert sorted(d["partition_id"] for d in done) == [0, 1, 2, 3]
+    assert all(d["span_count"] == 0 and d["parse_failures"] == 0
+               for d in done)
+    assert all(os.path.isdir(os.path.join(out_dir, f"part_bucket={b}"))
+               for b in range(4))
+    back = lin.read_output(spark, out_dir)
+    assert back.count() == 0
+    assert back.drop(lin.BUCKET_COL).dtypes == result.dtypes
+    assert dict(back.dtypes)[lin.BUCKET_COL] == "int"
+
+
+def test_commit_jobs_do_not_grow_with_bucket_count(spark, result, tmp_path):
+    """One partitioned write plus one stats aggregate, whatever the
+    bucket count. Both counts are past Spark's parallel-listing
+    threshold (32 dirs) and leave some bucket of the small fixture
+    corpus empty, so both launch the same listing and schema-only fill
+    jobs too."""
+    sc = spark.sparkContext
+
+    def jobs(n):
+        group = f"lineage-commit-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            lin.run_with_lineage(spark, result, str(tmp_path / str(n)),
+                                 n_partitions=n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(128) == jobs(64)
+
+
+# -- crash injection: kill the commit at one point, restart, compare ------
+
+LOST = (1, 4, 6)
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_on_call(monkeypatch, module, name, n):
+    """Make ``module.name`` raise on its ``n``-th call (1-based)."""
+    real, calls = getattr(module, name), []
+
+    def wrapper(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == n:
+            raise _Crash(f"{name} call {n}")
+        return real(*args, **kwargs)
+    monkeypatch.setattr(module, name, wrapper)
+
+
+def _rows(spark, out_dir):
+    return sorted(map(str, lin.read_output(spark, out_dir).collect()))
+
+
+def _lose(out_dir, buckets):
+    """The state a crash before these buckets' commit leaves behind."""
+    for b in buckets:
+        os.remove(os.path.join(out_dir, "_lineage", f"bucket={b}.json"))
+        shutil.rmtree(os.path.join(out_dir, f"part_bucket={b}"))
+
+
+def _restart_matches_clean(spark, result, out_dir, clean, want):
+    assert lin.remaining_buckets(spark, out_dir, N_PART) == want
+    done = lin.run_with_lineage(spark, result, out_dir, n_partitions=N_PART)
+    assert [d["partition_id"] for d in done] == want
+    assert lin.remaining_buckets(spark, out_dir, N_PART) == []
+    assert _rows(spark, out_dir) == clean
+    assert not os.path.exists(os.path.join(out_dir, "_tmp"))
+
+
+def test_crash_during_tmp_write_restart(spark, result, out_dir):
+    """A crash during the partitioned write leaves a stale partial _tmp:
+    rows of lost buckets AND of a READY one. The restart must discard
+    it, recommit only the lost buckets and leave READY ones alone."""
+    lin.run_with_lineage(spark, result, out_dir, n_partitions=N_PART)
+    clean = _rows(spark, out_dir)
+    _lose(out_dir, LOST)
+    lin.with_bucket(result.limit(5), N_PART).write \
+        .partitionBy(lin.BUCKET_COL).parquet(os.path.join(out_dir, "_tmp"))
+    os.makedirs(os.path.join(out_dir, "_tmp", "_temporary", "0"))
+    mtime = os.path.getmtime(os.path.join(out_dir, "part_bucket=0"))
+    _restart_matches_clean(spark, result, out_dir, clean, list(LOST))
+    assert os.path.getmtime(os.path.join(out_dir, "part_bucket=0")) == mtime
+
+
+def test_crash_after_rename_before_lineage_restart(spark, result, out_dir,
+                                                   monkeypatch):
+    """Crash after the first lost bucket's data rename, before its
+    lineage row lands (the second os.replace is the lineage file's):
+    the bucket's data is in place but not READY, and a half-written
+    lineage .tmp file is left behind."""
+    lin.run_with_lineage(spark, result, out_dir, n_partitions=N_PART)
+    clean = _rows(spark, out_dir)
+    _lose(out_dir, LOST)
+    _crash_on_call(monkeypatch, os, "replace", 2)
+    with pytest.raises(_Crash):
+        lin.run_with_lineage(spark, result, out_dir, n_partitions=N_PART)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(out_dir, f"part_bucket={LOST[0]}"))
+    _restart_matches_clean(spark, result, out_dir, clean, list(LOST))
+
+
+def test_crash_between_lineage_rows_restart(spark, result, out_dir,
+                                            monkeypatch):
+    """Crash while writing the second lost bucket's lineage row: the
+    first is READY and must not be recommitted; the second is renamed
+    but not READY; the third is still in _tmp."""
+    lin.run_with_lineage(spark, result, out_dir, n_partitions=N_PART)
+    clean = _rows(spark, out_dir)
+    _lose(out_dir, LOST)
+    _crash_on_call(monkeypatch, json, "dump", 2)
+    with pytest.raises(_Crash):
+        lin.run_with_lineage(spark, result, out_dir, n_partitions=N_PART)
+    monkeypatch.undo()
+    _restart_matches_clean(spark, result, out_dir, clean, list(LOST[1:]))

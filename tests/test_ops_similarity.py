@@ -54,6 +54,24 @@ def test_pandas_bruteforce_deterministic_on_ties(spark, query):
     assert got == [0, 1, 2, 3, 4]
 
 
+def test_pandas_bruteforce_near_tie_uses_rounded_key(spark):
+    """Two vectors whose sims differ by < 5e-4 round to the same 0.800,
+    so the global merge orders them by vec_id. The higher vec_id has the
+    higher unrounded sim and both straddle the k boundary in the same
+    partition: a cut on the unrounded sims keeps the wrong one. A second
+    partition holds the rows below them."""
+    def vec(c):
+        return [c, float(np.sqrt(1.0 - c * c))]
+    rows = [(9, vec(1.0)), (2, vec(0.8004)), (1, vec(0.8001)),
+            (3, vec(0.5)), (4, vec(0.4)), (5, vec(0.3))]
+    emb = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+                                "vec_id bigint, embedding array<double>")
+    assert emb.rdd.glom().map(len).collect() == [3, 3]
+    got = [(r.vec_id, r.sim) for r in
+           sim.knn_bruteforce_pandas(emb, vec(1.0), k=2).collect()]
+    assert got == [(9, 1.0), (1, 0.8)]
+
+
 def test_lsh_probe_keeps_planted_neighbor(emb, query):
     got = [r.vec_id for r in sim.ann_search_lsh(emb, query, k=5).collect()]
     assert got[0] == 0

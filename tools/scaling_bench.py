@@ -57,7 +57,7 @@ def _session(master: str, cores: int):
         .config("spark.ui.showConsoleProgress", "false")
         # Partition sizing must follow the PYTHON-UDF cost, not the IO
         # cost: the parse stage spends ~2 core-seconds per input MB
-        # (measured via event log, tools/profile_leg.py), ~100x a
+        # (measured via event log: perfbench/run.py --trace 1), ~100x a
         # columnar scan, so the default 128m split yields a handful of
         # multi-second tasks and the 4N leg runs the map stage in 1-2
         # uneven waves (straggler-bound). Same for the reduce side: the
@@ -311,7 +311,8 @@ Partitioning follows the Python-UDF cost, identically at every leg:
 ``advisoryPartitionSizeInBytes=8m`` (the parse stage costs ~2
 core-seconds per input MB — ~100x a columnar scan — so 128m/64m
 defaults produce 1-2 uneven waves at 4N and the stage goes
-straggler-bound; measured with tools/profile_leg.py: the serialize
+straggler-bound; measured from the event log (today:
+`python3 perfbench/run.py --workload W --seed N --seconds S --trace 1`): the serialize
 stage ran as 17 tasks = 41% utilization at 32 cores under the 64m
 advisory). Output commit uses FileOutputCommitter v2 (task-side
 renames; the v1 driver-side sequential rename is a fixed serial cost
