@@ -57,8 +57,8 @@ def canary(procs: int = 0, secs: float = 1.5) -> float:
     core-equivalents when it bites — BENCH/BASELINE.md round-4 notes
     item 7), so an 8-wide probe fits under the cap and reads quiet
     while the local[32] run itself is capped 25-45% slow (the
-    measured failure mode of tools/gated_pair.py's original 8-wide
-    gate, three times in round 5). Quiet-host baseline is ~7 per proc
+    measured failure mode of an earlier 8-wide gate, three times in
+    round 5). Quiet-host baseline is ~7 per proc
     with all cores busy (~6.7-7.0 at full 32-wide saturation vs ~5.9
     capped); a reading far below means the surrounding numbers were
     measured during a steal window (measured up to 10x task-time
@@ -76,8 +76,8 @@ def canary(procs: int = 0, secs: float = 1.5) -> float:
 # never quiets down, the run proceeds anyway (the driver needs a
 # number) but the JSON carries contended=true + the canary ratio so
 # cross-round tables can exclude it.
-# shared with tools/gated_pair.py via tools/steal_canary.py so the two
-# publication gates cannot drift apart when the host is re-baselined
+# the quiet reference and threshold live in tools/steal_canary.py, so
+# re-baselining the host is one edit there
 from tools.steal_canary import (          # noqa: E402
     DEFAULT_GATE as CANARY_GATE,
     QUIET_MITERS as QUIET_CANARY,

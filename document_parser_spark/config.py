@@ -141,9 +141,11 @@ IMAGE_MODE_REFERENCED = "referenced"
 
 # Default salt fan-out for the two-phase reassembly collect (SURVEY §4.1).
 DEFAULT_SALT_BUCKETS: int = 8
-# Span count above which a document takes the salted two-phase path
-# (adaptive salting — measured in tools/skew_bench.py: always-on
-# salting costs ~1.6x on ordinary size distributions).
+# Span count above which a document is hot: it takes the salted
+# two-phase reassembly and, if it is a pdf, the per-page parse
+# (always-on salting costs ~1.6x on ordinary size distributions).
+# operators/reassemble.py turns the hot ids into one per-row flag:
+# no hot docs, an id list, or overflow where every doc is hot.
 SALT_SPAN_THRESHOLD: int = 65536
 # size_bucket value flagging pathological documents at ingest (docs
 # above SALT_SPAN_THRESHOLD spans). extract() keys its salting

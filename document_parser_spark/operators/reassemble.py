@@ -13,14 +13,24 @@ map-side partial aggregation; phase 2 merges the K partial arrays per doc and
 sorts ONCE after flatten (``array_sort(flatten(collect_list(part)))`` —
 provably order-restoring because the sort key is inside each element).
 
-Salting is ADAPTIVE by default (``salt_threshold``): measured on this host
-(tools/skew_bench.py), always-on two-phase costs ~1.6x on ordinary
-distributions (a second full shuffle of every span, while the final merge of
-a hot doc is one task either way), and its real value is bounding the
-per-reducer fetch/build for pathological documents. So only docs whose span
-count exceeds the threshold take the two-phase path — identified by a cheap
-map-side-combined count pre-aggregation whose shuffle carries ~one row per
-(doc, input partition) — and everything else reassembles in one phase.
+Salting is ADAPTIVE: always-on two-phase costs ~1.6x on ordinary
+distributions (a second full shuffle of every span, while the final merge
+of a hot doc is one task either way — BENCH/BASELINE.md), so only the HOT
+docs take the salted path. This module owns the hot-set policy for the
+whole plan: ``collect_hot_ids`` makes the one bounded driver collect of
+the giant ids, and ``with_hot_flag`` turns that list into a per-row
+boolean for both of its consumers, this reassembly and the pdf per-page
+fork (``plans.pipeline.parse_all_branches``). Three cases:
+
+  * no hot docs: neither consumer calls the helper — single-phase
+    collect, doc-level pdf kernel;
+  * an id list: the flag is an ``isin`` literal up to ``_ISIN_MAX`` ids,
+    else a broadcast LocalRelation left join (local data, no lineage
+    re-evaluation);
+  * overflow (more than ``_HOT_ID_CAP`` ids — the list is then a
+    truncated, unordered sample): every doc is hot, i.e. unconditional
+    two-phase and every pdf doc paged.
+
 ``salt_threshold=None`` forces two-phase for all docs (the round-1
 behavior); ``salted=False`` disables salting entirely. The output array for
 a W-span doc is ~60*W bytes in ONE row regardless of salting — cap spans/doc
@@ -32,23 +42,45 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from document_parser_spark.config import (
-    DEFAULT_SALT_BUCKETS,
-    SALT_SPAN_THRESHOLD,
-)
+from document_parser_spark.config import DEFAULT_SALT_BUCKETS
 from document_parser_spark.schema import FAIL_KIND
 
 DOC_MARKER_KIND = "__doc__"
 _META_KINDS = (FAIL_KIND, DOC_MARKER_KIND)
 
-# Hot-doc plan choice: the hot-id set is collected to the driver ONCE,
-# bounded. ~20 B/id: the cap costs <= ~20 MB driver memory; above it the
-# corpus is so skew-ridden that unconditional two-phase is the right
-# plan anyway. _ISIN_MAX keeps the literal IN-list small enough for
-# codegen; bigger sets become a broadcast LocalRelation join (local
-# data -> zero lineage re-evaluation).
+# ~20 B/id: the cap costs <= ~20 MB driver memory; above it the corpus
+# is so skew-ridden that treating every doc as hot is the right plan
+# anyway. _ISIN_MAX keeps the literal IN-list small enough for codegen.
 _HOT_ID_CAP = 1_000_000
 _ISIN_MAX = 1_024
+
+HOT_COL = "_hot"
+
+
+def collect_hot_ids(hot_docs: DataFrame) -> list:
+    """The hot set's one driver collect: the ``doc_id`` column of
+    ``hot_docs``, bounded at ``_HOT_ID_CAP + 1`` ids (a longer list
+    means overflow). When the hot_docs lineage constant-folds to empty
+    (e.g. a ``lit('s')`` size_bucket), Spark serves it from the
+    LocalRelation WITHOUT launching a job."""
+    return [r[0] for r in hot_docs.limit(_HOT_ID_CAP + 1).collect()]
+
+
+def with_hot_flag(df: DataFrame, hot_ids: list) -> DataFrame:
+    """``df`` (keyed by ``doc_id``) plus a non-NULL boolean ``HOT_COL``:
+    every row on overflow, else doc_id in ``hot_ids`` (an ``isin``
+    literal up to ``_ISIN_MAX`` ids, a broadcast join above)."""
+    if len(hot_ids) > _HOT_ID_CAP:
+        return df.withColumn(HOT_COL, F.lit(True))
+    if len(hot_ids) <= _ISIN_MAX:
+        return df.withColumn(HOT_COL, F.coalesce(
+            F.col("doc_id").isin(list(hot_ids)), F.lit(False)))
+    ids = (df.sparkSession.createDataFrame(
+        [(i,) for i in hot_ids], "doc_id string")
+        .withColumn(HOT_COL, F.lit(True)))
+    return (df.join(F.broadcast(ids), "doc_id", "left")
+            .withColumn(HOT_COL, F.coalesce(F.col(HOT_COL), F.lit(False))))
+
 
 def _item() -> F.Column:
     return F.struct(
@@ -78,101 +110,40 @@ def _single_phase(parsed: DataFrame) -> DataFrame:
 def reassemble(parsed: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS,
                salted: bool = True,
                salt_threshold: int | None = None,
-               hot_docs: DataFrame | None = None,
-               hot_ids: list | None = None,
-               estimate_from_parsed: bool = False) -> DataFrame:
+               hot_ids: list | None = None) -> DataFrame:
     """PARSED_SCHEMA rows -> (doc_id, spans array<struct> in reading order
     with offsets renumbered 0..n-1, n_failures).
 
-    ``salt_threshold``: span count above which a doc counts as HOT and
-    gets salted (None = every doc, the always-salt mode). Adaptive
-    mode is a driver-side plan choice (AQE-spirited), decided by ONE
-    bounded driver collect of the hot-id set (the r2 probe-then-join
-    shape evaluated the hot_docs lineage twice — r2 ADVICE):
+    ``salt_threshold``: None salts every doc (the always-salt mode);
+    otherwise the plan follows ``hot_ids``, the list ``collect_hot_ids``
+    returned for docs above the threshold (module docstring):
 
-      * no hot docs: pure single-phase collect. ONE exchange; Spark's
-        map-side ``partial_collect_list`` already provides the
-        partial-combine role, so the explicit second phase would be a
-        pure extra exchange of all span data (measured,
-        tools/skew_bench.py).
-      * hot docs present (<= cap): ONE plan tree where the phase-1 key
-        is ``CASE hot THEN pmod(hash(ord0, ord1), K) ELSE 0`` — hot
-        docs spread over K partial collects, cold docs ride along with
-        a constant salt. The hot set is either an ``isin`` literal
-        (small) or a broadcast LocalRelation built from the collected
-        ids (no lineage re-evaluation either way); the parsed relation
-        is consumed exactly once (no hot/cold plan fork — a fork
-        duplicates the upstream UDF parse subtree).
-      * more hot docs than the cap: unconditional two-phase.
+      * no hot docs (None or empty): pure single-phase collect. ONE
+        exchange; Spark's map-side ``partial_collect_list`` already
+        provides the partial-combine role, so an explicit second phase
+        would be a pure extra exchange of all span data.
+      * hot docs: ONE plan tree where the phase-1 key is
+        ``CASE hot THEN pmod(hash(ord0, ord1), K) ELSE 0`` — hot docs
+        spread over K partial collects, cold docs ride along with a
+        constant salt. The parsed relation is consumed exactly once (no
+        hot/cold plan fork — a fork duplicates the upstream UDF parse
+        subtree). On overflow ``hot`` is constant true, so this is
+        unconditional two-phase.
 
-    The hot set comes from ``hot_docs`` (doc_id rows) if given —
-    ``extract`` passes the ingest-flagged giant bucket (or a raw-scan
-    estimate). Without it, adaptive mode requires an explicit
-    ``estimate_from_parsed=True``: the per-doc count is then collected
-    from ``parsed`` itself, which RE-EXECUTES its whole lineage — fine
-    for a materialized/scanned relation, a double parse for a UDF
-    pipeline (the regression the r2 verdict closed; guarded per r3
-    VERDICT #5 so no future caller trips it silently).
-    When the hot_docs lineage constant-folds to empty (e.g. a
-    ``lit('s')`` size_bucket), the collect is served from the
-    LocalRelation WITHOUT launching any Spark job — adaptive mode then
-    costs nothing at plan-build time.
     Fail rows (kind='__fail__') and per-doc presence markers
     (kind='__doc__', emitted so that fully-filtered docs still surface
     with status 'empty') are tallied/stripped here.
     """
-    if salted and salt_buckets > 1:
-        if salt_threshold is None:
-            docs = _two_phase(parsed, salt_buckets)
-        else:
-            if hot_ids is not None:
-                # pre-collected by the caller (extract() shares one
-                # bounded collect between this plan choice and the pdf
-                # per-page fork)
-                hot_rows = [(i,) for i in hot_ids]
-            else:
-                if hot_docs is None:
-                    if not estimate_from_parsed:
-                        raise ValueError(
-                            "reassemble(salt_threshold=...) needs a "
-                            "hot-doc estimate that does not re-execute "
-                            "the parse lineage: pass hot_docs/hot_ids "
-                            "(extract() derives them from the ingest "
-                            "size_bucket / raw spans), or opt in with "
-                            "estimate_from_parsed=True if `parsed` is "
-                            "a materialized relation whose re-scan is "
-                            "cheap")
-                    hot_docs = (parsed.groupBy("doc_id")
-                                .agg(F.count("*").alias("_n"))
-                                .filter(F.col("_n") > salt_threshold)
-                                .select("doc_id"))
-                hot_rows = hot_docs.limit(_HOT_ID_CAP + 1).collect()
-            if not hot_rows:
-                docs = _single_phase(parsed)
-            elif len(hot_rows) > _HOT_ID_CAP:
-                docs = _two_phase(parsed, salt_buckets)
-            else:
-                bucket_salt = F.pmod(F.hash("ord0", "ord1"),
-                                     F.lit(salt_buckets))
-                if len(hot_rows) <= _ISIN_MAX:
-                    case_salt = F.when(
-                        F.col("doc_id").isin([r[0] for r in hot_rows]),
-                        bucket_salt).otherwise(F.lit(0))
-                    docs = _two_phase(parsed, salt_buckets,
-                                      salt_expr=case_salt)
-                else:
-                    hot_ids_df = (parsed.sparkSession.createDataFrame(
-                        [(r[0],) for r in hot_rows], "doc_id string")
-                        .withColumn("_hot", F.lit(True)))
-                    tagged = parsed.join(F.broadcast(hot_ids_df),
-                                         "doc_id", "left")
-                    case_salt = (F.when(F.col("_hot").isNotNull(),
-                                        bucket_salt)
-                                 .otherwise(F.lit(0)))
-                    docs = _two_phase(tagged, salt_buckets,
-                                      salt_expr=case_salt)
-    else:
+    if not salted or salt_buckets <= 1 or (
+            salt_threshold is not None and not hot_ids):
         docs = _single_phase(parsed)
+    elif salt_threshold is None:
+        docs = _two_phase(parsed, salt_buckets)
+    else:
+        bucket_salt = F.pmod(F.hash("ord0", "ord1"), F.lit(salt_buckets))
+        docs = _two_phase(with_hot_flag(parsed, hot_ids), salt_buckets,
+                          salt_expr=F.when(F.col(HOT_COL), bucket_salt)
+                          .otherwise(F.lit(0)))
 
     meta = F.array(*[F.lit(k) for k in _META_KINDS])
     return docs.select(

@@ -4,10 +4,11 @@ and tokenization (context-window packing inputs, RAG passage
 indexing, the chunk relation `ops.dedup.chunk_dedup` consumes).
 
 Spark-first shape: the window boundaries are arithmetic over the
-split-word array — ``sequence`` + one ``explode`` (a Generate, not a
-shuffle) + ``slice``. No Python, no window function, no repartition:
-a document's chunks are produced where the document already lives,
-so the operator composes with any upstream partitioning for free.
+split-word array — ``sequence`` + ``slice`` inside one ``posexplode``
+(a Generate, not a shuffle). No Python, no window function, no
+repartition: a document's chunks are produced where the document
+already lives, so the operator composes with any upstream
+partitioning for free.
 Chunk counts follow the standard rule: one chunk when the doc fits,
 else enough stride steps to cover the tail (the last window may be
 short; it is never empty because ``stride < chunk`` keeps every
@@ -50,13 +51,14 @@ def sliding_chunks(docs: DataFrame, text_col: str = "text",
                 F.lit(1) + F.expr(
                     f"(_n - {int(chunk)} + {int(stride)} - 1) "
                     f"div {int(stride)}"))))
-    idx = F.explode(F.sequence(F.lit(0).cast("long"),
-                               F.col("_nc") - 1)).alias("chunk_id")
-    piece = F.slice(F.col("_ws"),
-                    (F.col("chunk_id") * stride + 1).cast("int"),
-                    chunk)
+    # the slices are built inside the generator's input, so the
+    # Generate carries only doc_id (exploding chunk ids next to `_ws`
+    # would copy the whole word array once per chunk)
+    pieces = F.transform(
+        F.sequence(F.lit(0), F.col("_nc").cast("int") - 1),
+        lambda i: F.slice(F.col("_ws"), i * stride + 1, chunk))
     return (base
-            .select("doc_id", idx, "_ws")
-            .select("doc_id", "chunk_id",
-                    F.size(piece).cast("long").alias("n_tokens"),
-                    F.array_join(piece, " ").alias("chunk_text")))
+            .select("doc_id", F.posexplode(pieces).alias("chunk_id", "_p"))
+            .select("doc_id", F.col("chunk_id").cast("long"),
+                    F.size("_p").cast("long").alias("n_tokens"),
+                    F.array_join("_p", " ").alias("chunk_text")))

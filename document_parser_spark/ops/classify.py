@@ -100,11 +100,14 @@ def scores_with_weights(docs: DataFrame, weights: DataFrame,
     -> (doc_id, n_words, sum_units). Missing buckets weigh 0 (left
     join); compose with the same sigmoid as the default path.
     """
-    ws = _words(text_col)
+    # the word array is projected (and counted) before the explode:
+    # next to the generator, size(ws) would make the Generate carry
+    # the text to every word row and re-split it there (quadratic)
     exploded = (docs
-                .select("doc_id",
-                        F.size(ws).cast("long").alias("n_words"),
-                        F.explode(ws).alias("_w"))
+                .select("doc_id", _words(text_col).alias("_ws"))
+                .select("doc_id", "_ws",
+                        F.size("_ws").cast("long").alias("n_words"))
+                .select("doc_id", "n_words", F.explode("_ws").alias("_w"))
                 .withColumn("bucket",
                             F.pmod(hash_col(F.col("_w"), fast),
                                    F.lit(dim))))

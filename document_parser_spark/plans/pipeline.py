@@ -46,10 +46,11 @@ from document_parser_spark.functions.cleaning import (
 from document_parser_spark.operators.pdf_parse import pdf_branch
 from document_parser_spark.refparser.pdf import COORD_MAX_DIGITS
 from document_parser_spark.operators.reassemble import (
-    _HOT_ID_CAP,
-    _ISIN_MAX,
     DOC_MARKER_KIND,
+    HOT_COL,
+    collect_hot_ids,
     reassemble,
+    with_hot_flag,
 )
 from document_parser_spark.operators.serialize import make_serialize_udf
 from document_parser_spark.schema import FAIL_KIND
@@ -185,31 +186,21 @@ def _python_parse_branch(src: DataFrame) -> DataFrame:
 
 
 def parse_all_branches(df: DataFrame, pdf_vlm: bool = False,
-                       hot_ids: list | None = None,
-                       hot_overflow: bool = False,
-                       salt_threshold: int | None = None) -> DataFrame:
+                       hot_ids: list | None = None) -> DataFrame:
     """Input docs -> union of parsed rows (PARSED_SCHEMA), reading the
     spans payload in THREE passes total (JVM arm, Python arm, pdf arm —
     see module docstring). ``pdf_vlm`` selects the VLM whole-doc PDF
     parser instead of the layout pipeline (the reference's alternative
     parser, pdf_parser_vlm.py).
 
-    ``hot_ids``: the collected giant-doc id set (extract's salting
-    probe). When non-empty, pdf docs in the set take the PER-PAGE
-    parse path (pdf_branch_paged) so a pathological page count cannot
-    pin one pandas group — at the cost of one extra pdf-subtree scan
-    paid ONLY when giants exist (the common no-giants plan keeps its
-    3+1 scans).
-
-    ``hot_overflow``: True when extract's probe hit _HOT_ID_CAP — the
-    collected subset is a TRUNCATED, unordered sample, so routing by
-    it would leave an arbitrary complement of the giants on the
-    doc-level kernel (the OOM the split exists to prevent). The pdf
-    fork then routes by an IN-PLAN predicate instead of an id list:
-    ingest's ``size_bucket`` when present, else pdf-line count >
-    ``salt_threshold``. Either kernel yields identical rows (parity-
-    tested), so the predicate only has to be a sound giant test, not
-    equal to the reassembly hot set."""
+    ``hot_ids``: the collected giant-doc id list (``collect_hot_ids``,
+    shared with reassembly). When non-empty, pdf docs flagged hot by
+    ``with_hot_flag`` take the PER-PAGE parse path (pdf_branch_paged)
+    so a pathological page count cannot pin one pandas group — at the
+    cost of one extra pdf-subtree scan paid ONLY when giants exist (the
+    common no-giants plan keeps its 3+1 scans). On overflow every pdf
+    doc is hot and paged; either kernel yields identical rows
+    (parity-tested)."""
     exploded = explode_spans(df, exclude_pdf=True)
 
     # Blank test (F8): the reference's `if not text.strip()` — Python
@@ -274,53 +265,37 @@ def parse_all_branches(df: DataFrame, pdf_vlm: bool = False,
 
     pdf_docs = (
         df.filter(F.exists("spans", lambda s: s["kind"] == "pdf_line"))
-        .select("doc_id",
-                F.filter("spans", lambda s: s["kind"] == "pdf_line").alias("spans"),
-                *(["size_bucket"] if "size_bucket" in df.columns else []))
+        .select("doc_id", F.filter(
+            "spans", lambda s: s["kind"] == "pdf_line").alias("spans"))
     )
     if pdf_vlm:
         from document_parser_spark.operators.pdf_vlm import pdf_vlm_branch
-        pdf_rows = pdf_vlm_branch(pdf_docs.select("doc_id", "spans"))
+        pdf_rows = pdf_vlm_branch(pdf_docs)
         # (the VLM parser concatenates whole pages — a giant doc fails
         # its raises_on_error contract long before pandas memory does,
         # so no per-page fork here)
-    elif hot_ids or hot_overflow:
+    elif hot_ids:
         from document_parser_spark.operators.pdf_parse import (
             pdf_branch_paged,
         )
-        if hot_overflow:
-            # truncated id sample — route by predicate (docstring)
-            if "size_bucket" in df.columns:
-                is_hot = F.col("size_bucket") == GIANT_SIZE_BUCKET
-            else:
-                is_hot = F.size("spans") > int(
-                    salt_threshold if salt_threshold is not None
-                    else SALT_SPAN_THRESHOLD)
-            cold_pdf = pdf_docs.filter(~is_hot)
-            hot_pdf = pdf_docs.filter(is_hot)
-        elif len(hot_ids) <= _ISIN_MAX:
-            is_hot = F.col("doc_id").isin(list(hot_ids))
-            cold_pdf = pdf_docs.filter(~is_hot)
-            hot_pdf = pdf_docs.filter(is_hot)
-        else:
-            ids_df = F.broadcast(df.sparkSession.createDataFrame(
-                [(i,) for i in hot_ids], "doc_id string"))
-            cold_pdf = pdf_docs.join(ids_df, "doc_id", "left_anti")
-            hot_pdf = pdf_docs.join(ids_df, "doc_id", "left_semi")
-        cold_pdf = cold_pdf.select("doc_id", "spans")
-        hot_pdf = hot_pdf.select("doc_id", "spans")
+        tagged = with_hot_flag(pdf_docs, hot_ids)
+        cold_pdf = tagged.filter(~F.col(HOT_COL)).select("doc_id", "spans")
         # anchor falls back to 0 for a doc whose pdf offsets are all
-        # NULL — the doc-level kernel's default (never-throw, A4)
-        anchor = F.coalesce(
-            F.array_min(F.transform("spans", lambda s: s["offset"])),
-            F.lit(0)).alias("anchor")
+        # NULL — the doc-level kernel's default (never-throw, A4). It is
+        # projected BEFORE the posexplode: next to the generator it would
+        # make the Generate carry the whole spans array to every line
+        # row and re-fold it there (quadratic in the doc's lines)
+        hot_pdf = tagged.filter(F.col(HOT_COL)).select(
+            "doc_id", "spans", F.coalesce(
+                F.array_min(F.transform("spans", lambda s: s["offset"])),
+                F.lit(0)).alias("anchor"))
         # posexplode: the span-array position rides along so the
         # per-page kernel can restore SPAN order inside its group —
         # groupBy shuffle arrival order is nondeterministic, and the
         # layout sort breaks coordinate ties by input order, which
         # must mean span order exactly as in the doc-level kernel
         lines = (hot_pdf.select(
-            "doc_id", anchor,
+            "doc_id", "anchor",
             F.posexplode(F.transform(
                 "spans",
                 lambda s: F.coalesce(s["text"], F.lit(""))))
@@ -331,7 +306,7 @@ def parse_all_branches(df: DataFrame, pdf_vlm: bool = False,
                 1).try_cast("long")))
         pdf_rows = pdf_branch(cold_pdf).unionByName(pdf_branch_paged(lines))
     else:
-        pdf_rows = pdf_branch(pdf_docs.select("doc_id", "spans"))
+        pdf_rows = pdf_branch(pdf_docs)
 
     # presence marker: exactly one per input doc, stripped during reassembly
     marker_rows = df.select(
@@ -369,8 +344,8 @@ def extract(
     = first-3-paragraph language column (A2). All three are narrow
     maps over the reassembled span array — zero extra shuffles.
     """
-    # Adaptive-salting hot set, collected ONCE (bounded — see
-    # reassemble's cap notes) and shared by the reassembly plan choice
+    # Adaptive-salting hot set, collected ONCE (collect_hot_ids, whose
+    # module owns the policy) and shared by the reassembly plan choice
     # AND the pdf per-page fork. Preferred source: the ingest-time
     # size_bucket column (GIANT_SIZE_BUCKET flags docs above the span
     # threshold) — a dictionary-encoded string scan, no spans payload
@@ -397,16 +372,8 @@ def extract(
                       .select("doc_id"))
         else:
             hot_df = _hot_docs_fallback(df, salt_threshold)
-        hot_ids = [r[0] for r in hot_df.limit(_HOT_ID_CAP + 1).collect()]
-    # past the cap the collected list is a truncated unordered sample:
-    # reassemble falls back to unconditional two-phase, and the pdf
-    # fork must route by predicate, not by the sample (else the giants
-    # outside it keep the whole-doc kernel the split protects against)
-    hot_overflow = hot_ids is not None and len(hot_ids) > _HOT_ID_CAP
-    parsed = parse_all_branches(
-        df, pdf_vlm=pdf_vlm,
-        hot_ids=None if hot_overflow else hot_ids,
-        hot_overflow=hot_overflow, salt_threshold=salt_threshold)
+        hot_ids = collect_hot_ids(hot_df)
+    parsed = parse_all_branches(df, pdf_vlm=pdf_vlm, hot_ids=hot_ids)
     docs = reassemble(parsed, salt_buckets=salt_buckets, salted=salted,
                       salt_threshold=salt_threshold, hot_ids=hot_ids)
     if parse_images:

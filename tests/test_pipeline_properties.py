@@ -70,11 +70,22 @@ def test_null_kind_and_null_text_spans_never_vanish(spark):
     assert got["nt-only"][2] == "empty" and got["nt-only"][0] == []
 
 
-def test_salted_equals_unsalted(spark, synth_df):
+def test_salted_equals_unsalted(spark, synth_df, monkeypatch):
+    """Every doc flagged giant and the hot-id cap below the doc count:
+    extract takes the overflow plan (every doc hot — unconditional
+    two-phase reassembly, every pdf doc paged), which must equal the
+    unsalted plan."""
+    from document_parser_spark.config import GIANT_SIZE_BUCKET
+    from document_parser_spark.operators import reassemble as rmod
     from document_parser_spark.plans.pipeline import extract
 
-    salted = _collect(extract(synth_df, salted=True, salt_buckets=7))
-    unsalted = _collect(extract(synth_df, salted=False))
+    giants = synth_df.withColumn("size_bucket", F.lit(GIANT_SIZE_BUCKET))
+    monkeypatch.setattr(rmod, "_HOT_ID_CAP", N_SAMPLE - 1)
+    salted_df = extract(giants, salted=True, salt_buckets=7)
+    optimized = salted_df._jdf.queryExecution().optimizedPlan().toString()
+    assert "pmod" in optimized and "FlatMapGroupsInPandas" in optimized
+    salted = _collect(salted_df)
+    unsalted = _collect(extract(giants, salted=False))
     assert salted == unsalted
 
 

@@ -72,6 +72,57 @@ def test_no_cartesian_products_anywhere(spark, entry):
             assert "BroadcastNestedLoopJoin" not in p, name
 
 
+def _generate_carry_violations(df: DataFrame) -> list[str]:
+    """Every ``Generate`` in ``df``'s optimized plan that carries, to
+    each of its output rows, a child column that is an array or map, or
+    a string/binary its own generator reads. Either one is copied (or
+    re-read by a projection above) once per generated row — quadratic
+    in the exploded length."""
+    bad = []
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName() != "Generate":
+            continue
+        read = node.generator().references()
+        carried = node.requiredChildOutput()
+        for i in range(carried.size()):
+            col = carried.apply(i)
+            kind = col.dataType().typeName()
+            if kind in ("array", "map") or (
+                    kind.split()[0] in ("string", "binary")
+                    and read.contains(col)):
+                bad.append(f"{col.name()}:{kind} under "
+                           f"{node.generator().prettyName()}")
+    return bad
+
+
+def test_generators_carry_no_payload(spark, entry):
+    """A generator projected next to a function of the array it
+    explodes makes its Generate carry that array to every output row
+    (the hot-pdf anchor, scores_with_weights' word count, the chunk
+    slicer all measured quadratic). Audit extract with the per-page
+    pdf fork engaged, every contract query, and scores_with_weights."""
+    from document_parser_spark.ops.classify import scores_with_weights
+    from document_parser_spark.plans.pipeline import extract
+    from document_parser_spark.sources.synth import fixtures_dataframe
+
+    paged = extract(fixtures_dataframe(spark).drop("size_bucket"),
+                    salt_threshold=1)
+    assert "FlatMapGroupsInPandas" in plan(paged, mode="simple")
+    plans = {"extract(paged)": paged}
+    for name, fn in entry.queries().items():
+        plans[name] = fn(spark, SF)
+    weights = spark.createDataFrame([(0, 1)], "bucket long, w_units long")
+    plans["scores_with_weights"] = scores_with_weights(
+        spark.read.parquet(f"{SF}/documents.parquet"), weights)
+    bad = {name: v for name, df in plans.items()
+           if (v := _generate_carry_violations(df))}
+    assert not bad, bad
+
+
 def test_extract_pipeline_shape(spark, entry):
     p = plan(entry.queries()["extract_pipeline"](spark, SF))
     # the one reassembly shuffle: partial aggregation runs map-side
@@ -131,26 +182,6 @@ def test_reassembly_salt_limits_shuffle_key(spark):
     assert "partial_collect_list" in p
     # two aggregation phases -> two exchanges (salted partial + final)
     assert p.count("Exchange") >= 2
-
-
-def test_reassemble_adaptive_requires_hot_doc_source(spark):
-    """r3 VERDICT #5: adaptive mode without ``hot_docs`` used to
-    collect per-doc counts from the parsed relation itself, silently
-    re-executing a UDF parse subtree. Bare adaptive calls must now
-    fail loudly; the explicit opt-in keeps the materialized-relation
-    use (tools/skew_bench.py) working."""
-    import pytest
-
-    from document_parser_spark.operators.reassemble import reassemble
-    from document_parser_spark.plans.pipeline import parse_all_branches
-    from document_parser_spark.sources.synth import fixtures_dataframe
-    parsed = parse_all_branches(fixtures_dataframe(spark))
-    with pytest.raises(ValueError, match="hot_docs"):
-        reassemble(parsed, salt_threshold=1000)
-    # opt-in path still works end to end
-    out = reassemble(parsed, salt_threshold=1000,
-                     estimate_from_parsed=True)
-    assert out.count() > 0
 
 
 def test_dedup_minhash_no_global_sort(spark, entry):
@@ -494,13 +525,14 @@ def test_hot_overflow_routes_pdf_fork_by_predicate(spark, monkeypatch):
     """Past _HOT_ID_CAP the collected hot-id list is a truncated,
     unordered sample — routing the pdf fork by it left the giants
     outside the sample on the whole-doc kernel (the OOM the per-page
-    split exists to prevent). On overflow the fork must route by the
-    in-plan predicate instead, page-splitting EVERY giant, with rows
-    equal to the doc-level oracle."""
+    split exists to prevent). On overflow every pdf doc is paged,
+    page-splitting EVERY giant, with rows equal to the doc-level
+    oracle."""
+    from document_parser_spark.operators import reassemble as rmod
     from document_parser_spark.plans import pipeline
     from document_parser_spark.refparser.parse import parse_document
 
-    monkeypatch.setattr(pipeline, "_HOT_ID_CAP", 1)
+    monkeypatch.setattr(rmod, "_HOT_ID_CAP", 1)
 
     def giant(name):
         return (name, [("pdf_line",
@@ -558,7 +590,6 @@ def test_hot_set_past_isin_max_uses_broadcast_join(spark, monkeypatch):
     baseline = snap(pipeline.extract(df, salt_threshold=100))
 
     monkeypatch.setattr(rmod, "_ISIN_MAX", 1)
-    monkeypatch.setattr(pipeline, "_ISIN_MAX", 1)
     out_df = pipeline.extract(df, salt_threshold=100)
     p = plan(out_df, mode="simple")
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoop" in p, p

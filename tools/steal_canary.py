@@ -22,7 +22,7 @@ from __future__ import annotations
 import time
 
 # single source of truth for every publication gate that brackets a
-# measurement with this canary (bench.py, tools/gated_pair.py): the
+# measurement with this canary (bench.py): the
 # quiet-host per-proc reference and the default contended threshold.
 # Re-baselining the host means editing THESE, not per-tool literals.
 QUIET_MITERS = 7.0
