@@ -25,6 +25,13 @@ import json
 import sys
 import time
 
+from document_parser_spark.config import (
+    DEFAULT_OUTPUT_PARTITIONS,
+    DEFAULT_SALT_BUCKETS,
+    IMAGE_MODE_PLACEHOLDER,
+    IMAGE_MODE_REFERENCED,
+)
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
@@ -32,12 +39,13 @@ def main(argv: list[str] | None = None) -> int:
                    help="parquet/Iceberg dir of (doc_id, spans[, host, "
                         "size_bucket])")
     p.add_argument("--output", required=True, help="output table dir")
-    p.add_argument("--partitions", type=int, default=64,
+    p.add_argument("--partitions", type=int,
+                   default=DEFAULT_OUTPUT_PARTITIONS,
                    help="stable output bucket count (restart granularity)")
-    p.add_argument("--salt-buckets", type=int, default=8,
+    p.add_argument("--salt-buckets", type=int, default=DEFAULT_SALT_BUCKETS,
                    help="salt fan-out for the reassembly shuffle")
-    p.add_argument("--image-mode", default="placeholder",
-                   choices=("placeholder", "referenced"))
+    p.add_argument("--image-mode", default=IMAGE_MODE_PLACEHOLDER,
+                   choices=(IMAGE_MODE_PLACEHOLDER, IMAGE_MODE_REFERENCED))
     p.add_argument("--media", default=None,
                    help="parquet dir of media binaries (doc_id, media_ref,"
                         " content) — with --artifacts-dir, REFERENCED "
@@ -95,7 +103,7 @@ def main(argv: list[str] | None = None) -> int:
         spark, result, args.output, n_partitions=args.partitions,
         input_files=[args.input])
     n_artifacts = n_written = None
-    if args.image_mode == "referenced":
+    if args.image_mode == IMAGE_MODE_REFERENCED:
         # artifacts-dir analogue: write the media manifest beside the
         # markdown output (sibling dir — the lineage glob owns --output)
         from document_parser_spark.operators.serialize import (
@@ -119,14 +127,16 @@ def main(argv: list[str] | None = None) -> int:
             n_written = st.filter(st.status == "written").count()
     wall = time.time() - t0
 
-    n_docs = lin.read_output(spark, args.output).count()
+    # throughput counts only this run's buckets: a restart that skips
+    # READY buckets must not claim their docs
+    run_docs = sum(d["doc_count"] for d in done)
     summary = {
         "buckets_committed": len(done),
         "span_count": sum(d["span_count"] for d in done),
         "parse_failures": sum(d["parse_failures"] for d in done),
-        "output_docs": n_docs,
+        "output_docs": lin.read_output(spark, args.output).count(),
         "wall_s": round(wall, 2),
-        "docs_per_sec": round(n_docs / wall, 1) if wall > 0 else None,
+        "docs_per_sec": round(run_docs / wall, 1) if wall > 0 else None,
     }
     if n_artifacts is not None:
         summary["artifacts"] = n_artifacts

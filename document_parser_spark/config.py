@@ -75,8 +75,6 @@ PY_WHITESPACE: str = "".join(
 # pptx/xlsx docs ingest as kind "text" items + kind "table" tables.
 INPUT_KINDS = ("html", "pdf_line", "text", "image", "docx", "docx_table",
                "table")
-OUTPUT_KINDS = ("heading", "text", "list_item", "table", "image", "code",
-                "page_break")
 
 # Table cell/row separators inside a single table span's text payload.
 CELL_SEP: str = "\x1f"   # unit separator between cells
@@ -87,11 +85,9 @@ STATUS_OK = "ok"
 STATUS_EMPTY = "empty"
 STATUS_PARSE_FAILURE = "parse_failure"
 
-# Lineage status vocabulary mirrors webhook_manager/schemas.py:7-13.
-LINEAGE_PENDING = "PENDING"
-LINEAGE_PROCESSING = "PROCESSING"
+# Lineage status of a committed bucket (READY in the reference's
+# webhook_manager/schemas.py:7-13 vocabulary).
 LINEAGE_READY = "READY"
-LINEAGE_ERROR = "ERROR"
 
 # ---------------------------------------------------------------------------
 # HTML boilerplate classification (SURVEY.md §7.3.6 — constants are ours,

@@ -105,11 +105,12 @@ def _fill_empty(spark: SparkSession, schema, tmp: str,
 
 def _bucket_stats(spark: SparkSession, tmp: str,
                   schema) -> dict[int, tuple]:
-    """(span_count, parse_failures) per bucket from the written files.
-    Extraction output carries (spans, status); other relations (e.g. the
-    curation pipeline's curated-corpus rows) commit through the same
-    machinery with zeroed tallies. The known schema spares Spark the
-    footer-reading job of schema inference."""
+    """(span_count, parse_failures, doc_count) per bucket from the
+    written files. Extraction output carries (spans, status); other
+    relations (e.g. the curation pipeline's curated-corpus rows) commit
+    through the same machinery with zeroed span/failure tallies. The
+    known schema spares Spark the footer-reading job of schema
+    inference."""
     df = spark.read.schema(schema).parquet(tmp)
     zero = F.lit(0).cast("long")
     # size(spans.offset): nested pruning reads one int leaf, not spans
@@ -117,8 +118,9 @@ def _bucket_stats(spark: SparkSession, tmp: str,
              else zero)
     failures = (F.sum((F.col("status") == STATUS_PARSE_FAILURE)
                       .cast("long")) if "status" in df.columns else zero)
-    return {r[0]: (int(r[1] or 0), int(r[2] or 0)) for r in
-            df.groupBy(BUCKET_COL).agg(spans, failures).collect()}
+    return {r[0]: (int(r[1] or 0), int(r[2] or 0), r[3]) for r in
+            df.groupBy(BUCKET_COL).agg(spans, failures, F.count("*"))
+            .collect()}
 
 
 def run_with_lineage(spark: SparkSession, result: DataFrame, out_dir: str,
@@ -152,13 +154,14 @@ def run_with_lineage(spark: SparkSession, result: DataFrame, out_dir: str,
         data_dir = _bucket_dir(out_dir, b)
         shutil.rmtree(data_dir, ignore_errors=True)
         os.replace(_bucket_dir(tmp, b), data_dir)  # atomic on POSIX
-        span_count, parse_failures = stats.get(b, (0, 0))
+        span_count, parse_failures, doc_count = stats.get(b, (0, 0, 0))
         row = {
             "partition_id": b,
             "status": LINEAGE_READY,
             "input_files": input_files or [],
             "span_count": span_count,
             "parse_failures": parse_failures,
+            "doc_count": doc_count,
             "updated_at": time.time(),
         }
         lpath = os.path.join(_lineage_dir(out_dir), f"bucket={b}.json")

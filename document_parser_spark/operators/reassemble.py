@@ -15,7 +15,7 @@ provably order-restoring because the sort key is inside each element).
 
 Salting is ADAPTIVE: always-on two-phase costs ~1.6x on ordinary
 distributions (a second full shuffle of every span, while the final merge
-of a hot doc is one task either way — BENCH/BASELINE.md), so only the HOT
+of a hot doc is one task either way — PRIOR_ROUNDS.md), so only the HOT
 docs take the salted path. This module owns the hot-set policy for the
 whole plan: ``collect_hot_ids`` makes the one bounded driver collect of
 the giant ids, and ``with_hot_flag`` turns that list into a per-row

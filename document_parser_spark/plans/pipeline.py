@@ -72,14 +72,14 @@ def _hot_docs_fallback(df: DataFrame, salt_threshold: int) -> DataFrame:
             .select("doc_id"))
 
 
-def explode_spans(df: DataFrame, exclude_pdf: bool = True) -> DataFrame:
-    """posexplode(spans) -> one row per span (the iterate_items analogue)."""
+def explode_spans(df: DataFrame) -> DataFrame:
+    """posexplode of the non-pdf spans -> one row per span (the
+    iterate_items analogue; pdf lines go to the pdf arm instead)."""
     # NULL-safe pdf exclusion: `s.kind != 'pdf_line'` is NULL for a
     # NULL kind and the array filter would silently drop the span
     # before it can reach the FAIL arm (r3 ADVICE)
-    spans = (F.filter("spans", lambda s: ~F.coalesce(
-                 s["kind"] == "pdf_line", F.lit(False)))
-             if exclude_pdf else F.col("spans"))
+    spans = F.filter("spans", lambda s: ~F.coalesce(
+        s["kind"] == "pdf_line", F.lit(False)))
     return (
         df.select("doc_id", F.posexplode(spans).alias("pos", "span"))
         .select(
@@ -201,7 +201,7 @@ def parse_all_branches(df: DataFrame, pdf_vlm: bool = False,
     common no-giants plan keeps its 3+1 scans). On overflow every pdf
     doc is hot and paged; either kernel yields identical rows
     (parity-tested)."""
-    exploded = explode_spans(df, exclude_pdf=True)
+    exploded = explode_spans(df)
 
     # Blank test (F8): the reference's `if not text.strip()` — Python
     # strip semantics via the shared PY_WHITESPACE set (translate is
@@ -328,8 +328,6 @@ def extract(
     df: DataFrame,
     image_mode: str = IMAGE_MODE_PLACEHOLDER,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    salted: bool = True,
-    salt_threshold: int | None = SALT_SPAN_THRESHOLD,
     parse_images: bool = False,
     translate: bool = False,
     detect_lang: bool = False,
@@ -364,18 +362,15 @@ def extract(
     # column to estimate bytes is the full-corpus second scan r4
     # VERDICT #2 removed. Route external tables through
     # ingest_raw_text or add size_bucket upstream to get both back.
-    hot_ids: list | None = None
-    if salted and salt_threshold is not None:
-        if "size_bucket" in df.columns:
-            hot_df = (df.filter(F.col("size_bucket")
-                                == GIANT_SIZE_BUCKET)
-                      .select("doc_id"))
-        else:
-            hot_df = _hot_docs_fallback(df, salt_threshold)
-        hot_ids = collect_hot_ids(hot_df)
+    if "size_bucket" in df.columns:
+        hot_df = (df.filter(F.col("size_bucket") == GIANT_SIZE_BUCKET)
+                  .select("doc_id"))
+    else:
+        hot_df = _hot_docs_fallback(df, SALT_SPAN_THRESHOLD)
+    hot_ids = collect_hot_ids(hot_df)
     parsed = parse_all_branches(df, pdf_vlm=pdf_vlm, hot_ids=hot_ids)
-    docs = reassemble(parsed, salt_buckets=salt_buckets, salted=salted,
-                      salt_threshold=salt_threshold, hot_ids=hot_ids)
+    docs = reassemble(parsed, salt_buckets=salt_buckets,
+                      salt_threshold=SALT_SPAN_THRESHOLD, hot_ids=hot_ids)
     if parse_images:
         from document_parser_spark.operators.enrich import (
             insert_ocr_after_images,

@@ -5,11 +5,9 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 SPAN_STRUCT = StructType([
@@ -32,26 +30,6 @@ DOCUMENTS_OUT_SCHEMA = StructType([
     StructField("spans", ArrayType(SPAN_STRUCT), False),
     StructField("markdown", StringType(), True),
     StructField("status", StringType(), False),
-])
-
-LINEAGE_SCHEMA = StructType([
-    StructField("partition_id", IntegerType(), False),
-    StructField("status", StringType(), False),
-    StructField("input_files", ArrayType(StringType()), True),
-    StructField("span_count", LongType(), False),
-    StructField("parse_failures", LongType(), False),
-    StructField("updated_at", TimestampType(), False),
-])
-
-# Exploded working relation (one row per input span) — the Spark analogue of
-# iterate_items() (SURVEY §1.2).
-EXPLODED_SCHEMA = StructType([
-    StructField("doc_id", StringType(), False),
-    StructField("pos", IntegerType(), False),
-    StructField("kind", StringType(), False),
-    StructField("text", StringType(), True),
-    StructField("media_ref", StringType(), True),
-    StructField("offset", IntegerType(), False),
 ])
 
 # Parsed-span relation emitted by every per-kind branch before reassembly:

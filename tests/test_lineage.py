@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,7 +91,8 @@ def test_error_rows_counted(spark, out_dir):
                            f"bucket={done[0]['partition_id']}.json")) as fh:
         row = json.load(fh)
     assert set(row) == {"partition_id", "status", "input_files",
-                        "span_count", "parse_failures", "updated_at"}
+                        "span_count", "parse_failures", "doc_count",
+                        "updated_at"}
 
 
 def test_crash_leftover_tmp_dir_invisible_to_read_output(spark, result,
@@ -231,3 +234,32 @@ def test_crash_between_lineage_rows_restart(spark, result, out_dir,
         lin.run_with_lineage(spark, result, out_dir, n_partitions=N_PART)
     monkeypatch.undo()
     _restart_matches_clean(spark, result, out_dir, clean, list(LOST[1:]))
+
+
+def test_extract_cli_restart_counts_only_this_runs_docs(spark, tmp_path):
+    """bin/extract.py run twice over one output: the second run skips
+    every READY bucket, so its throughput covers the docs it committed
+    (none), not the whole output table."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    fixtures_dataframe(spark).write.parquet(inp)
+
+    def run():
+        res = subprocess.run(
+            [sys.executable, "bin/extract.py", "--input", inp,
+             "--output", out, "--partitions", "4",
+             "--shuffle-partitions", "4"],
+            env=dict(os.environ, PYTHONPATH=repo), capture_output=True,
+            text=True, timeout=600, cwd=repo)
+        assert res.returncode == 0, res.stderr[-2000:]
+        return json.loads(res.stdout.strip().splitlines()[-1])
+
+    first, second = run(), run()
+    assert first["buckets_committed"] == 4
+    assert first["docs_per_sec"] > 0
+    assert second["buckets_committed"] == 0
+    assert second["docs_per_sec"] in (0, None)
+    assert second["output_docs"] == first["output_docs"]
+    rows = [json.loads(f.read_text())
+            for f in (tmp_path / "out" / "_lineage").glob("*.json")]
+    assert sum(r["doc_count"] for r in rows) == first["output_docs"]

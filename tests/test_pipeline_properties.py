@@ -81,11 +81,11 @@ def test_salted_equals_unsalted(spark, synth_df, monkeypatch):
 
     giants = synth_df.withColumn("size_bucket", F.lit(GIANT_SIZE_BUCKET))
     monkeypatch.setattr(rmod, "_HOT_ID_CAP", N_SAMPLE - 1)
-    salted_df = extract(giants, salted=True, salt_buckets=7)
+    salted_df = extract(giants, salt_buckets=7)
     optimized = salted_df._jdf.queryExecution().optimizedPlan().toString()
     assert "pmod" in optimized and "FlatMapGroupsInPandas" in optimized
     salted = _collect(salted_df)
-    unsalted = _collect(extract(giants, salted=False))
+    unsalted = _collect(extract(synth_df))
     assert salted == unsalted
 
 
@@ -127,9 +127,8 @@ def test_adaptive_salting_equals_unsalted(spark, synth_df):
         "size_bucket",
         F.when(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 0,
                F.lit(GIANT_SIZE_BUCKET)).otherwise(F.col("size_bucket")))
-    adaptive = _collect(extract(tagged, salted=True, salt_buckets=5,
-                                salt_threshold=30))
-    unsalted = _collect(extract(tagged, salted=False))
+    adaptive = _collect(extract(tagged, salt_buckets=5))
+    unsalted = _collect(extract(synth_df))
     assert adaptive == unsalted
 
 
@@ -137,6 +136,6 @@ def test_adaptive_salting_no_giants_single_phase(spark, synth_df):
     """Without giant-bucket docs the probe must pick the single-phase
     plan — output still identical."""
     from document_parser_spark.plans.pipeline import extract
-    adaptive = _collect(extract(synth_df, salted=True))
-    unsalted = _collect(extract(synth_df, salted=False))
+    adaptive = _collect(extract(synth_df))
+    unsalted = _collect(extract(synth_df.drop("size_bucket")))
     assert adaptive == unsalted

@@ -23,6 +23,15 @@ def plan(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def tag_giants(df: DataFrame, *giants: str) -> DataFrame:
+    """Flag ``giants`` the way ingest does (size_bucket 'g'), every
+    other doc 's'."""
+    from document_parser_spark.config import GIANT_SIZE_BUCKET
+    return df.withColumn("size_bucket", F.when(
+        F.col("doc_id").isin(list(giants)), F.lit(GIANT_SIZE_BUCKET))
+        .otherwise(F.lit("s")))
+
+
 @pytest.fixture(scope="module")
 def entry():
     import __spark_entry__ as m
@@ -105,12 +114,13 @@ def test_generators_carry_no_payload(spark, entry):
     (the hot-pdf anchor, scores_with_weights' word count, the chunk
     slicer all measured quadratic). Audit extract with the per-page
     pdf fork engaged, every contract query, and scores_with_weights."""
+    from document_parser_spark.config import GIANT_SIZE_BUCKET
     from document_parser_spark.ops.classify import scores_with_weights
     from document_parser_spark.plans.pipeline import extract
     from document_parser_spark.sources.synth import fixtures_dataframe
 
-    paged = extract(fixtures_dataframe(spark).drop("size_bucket"),
-                    salt_threshold=1)
+    paged = extract(fixtures_dataframe(spark).withColumn(
+        "size_bucket", F.lit(GIANT_SIZE_BUCKET)))
     assert "FlatMapGroupsInPandas" in plan(paged, mode="simple")
     plans = {"extract(paged)": paged}
     for name, fn in entry.queries().items():
@@ -222,7 +232,7 @@ def test_giant_bucket_engages_case_salt(spark):
              "spans": [{"kind": "text", "text": "c", "media_ref": None,
                         "offset": 0}]}]
     df = spark.createDataFrame(rows, DOCUMENTS_IN_SCHEMA)
-    out = extract(df, salt_threshold=100)
+    out = extract(df)
     p = plan(out)
     assert "pmod" in p           # CASE-salt reached the phase-1 key
     got = {r.doc_id: r for r in out.collect()}
@@ -253,11 +263,13 @@ def test_hot_doc_fallback_never_reads_payload(spark, tmp_path):
     assert "text" not in rs[0] and "media_ref" not in rs[0], rs[0]
 
 
-def test_fallback_hot_doc_engages_case_salt(spark):
+def test_fallback_hot_doc_engages_case_salt(spark, monkeypatch):
     """No size_bucket column at all: the span-count fallback must still
     flag the giant doc, route extract() to the CASE-salted tree, and
-    reassemble exactly."""
+    reassemble exactly (threshold lowered so a 300-span doc is giant)."""
+    from document_parser_spark.plans import pipeline
     from document_parser_spark.plans.pipeline import extract
+    monkeypatch.setattr(pipeline, "SALT_SPAN_THRESHOLD", 100)
     rows = [("hot", [(f"w{j}", j) for j in range(300)]),
             ("cold", [("c", 0)])]
     df = spark.createDataFrame(
@@ -265,7 +277,7 @@ def test_fallback_hot_doc_engages_case_salt(spark):
               for t, o in spans]) for d, spans in rows],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
-    out = extract(df, salt_threshold=100)
+    out = extract(df)
     p = plan(out)
     assert "pmod" in p           # CASE-salt reached the phase-1 key
     got = {r.doc_id: r for r in out.collect()}
@@ -302,7 +314,7 @@ def test_giant_pdf_doc_splits_per_page(spark):
     df = spark.createDataFrame(
         rows, "doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
-    out_df = extract(df, salt_threshold=100)
+    out_df = extract(tag_giants(df, "hot"))
     p = plan(out_df, mode="simple")
     assert "FlatMapGroupsInPandas" in p      # the per-page kernel engaged
     got = {r.doc_id: r for r in out_df.collect()}
@@ -332,7 +344,7 @@ def test_giant_pdf_coordinate_ties_break_in_span_order(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
     # many shuffle partitions maximize arrival-order scrambling
-    out = extract(df, salt_threshold=100).collect()[0]
+    out = extract(tag_giants(df, "tied")).collect()[0]
     want = parse_document("tied", hot)
     assert [(s["kind"], s["text"], s["media_ref"], s["offset"])
             for s in out.spans] == want.spans
@@ -353,8 +365,8 @@ def test_giant_pdf_all_null_offsets_does_not_throw(spark):
         [("nulloff", spans)],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
-    paged = extract(df, salt_threshold=100).collect()[0]
-    doc_level = extract(df, salt_threshold=10_000).collect()[0]
+    paged = extract(tag_giants(df, "nulloff")).collect()[0]
+    doc_level = extract(tag_giants(df)).collect()[0]
     assert paged.status == doc_level.status == "ok"
     assert [tuple(s) for s in paged.spans] == \
         [tuple(s) for s in doc_level.spans]
@@ -378,8 +390,8 @@ def test_pdf_mixed_null_offsets_does_not_throw(spark):
         [("mixoff", spans)],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
-    paged = extract(df, salt_threshold=100).collect()[0]
-    doc_level = extract(df, salt_threshold=10_000).collect()[0]
+    paged = extract(tag_giants(df, "mixoff")).collect()[0]
+    doc_level = extract(tag_giants(df)).collect()[0]
     assert paged.status == doc_level.status == "ok"
     assert [tuple(s) for s in paged.spans] == \
         [tuple(s) for s in doc_level.spans]
@@ -545,7 +557,7 @@ def test_hot_overflow_routes_pdf_fork_by_predicate(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
-    out_df = pipeline.extract(df, salt_threshold=100)
+    out_df = pipeline.extract(tag_giants(df, "g1", "g2", "g3"))
     assert "FlatMapGroupsInPandas" in plan(out_df, mode="simple")
     got = {r.doc_id: r for r in out_df.collect()}
     for name, spans in rows:
@@ -587,10 +599,11 @@ def test_hot_set_past_isin_max_uses_broadcast_join(spark, monkeypatch):
                            r.status, r.n_failures)
                 for r in out_df.collect()}
 
-    baseline = snap(pipeline.extract(df, salt_threshold=100))
+    df = tag_giants(df, "t1", "t2", "p1")
+    baseline = snap(pipeline.extract(df))
 
     monkeypatch.setattr(rmod, "_ISIN_MAX", 1)
-    out_df = pipeline.extract(df, salt_threshold=100)
+    out_df = pipeline.extract(df)
     p = plan(out_df, mode="simple")
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoop" in p, p
     assert "FlatMapGroupsInPandas" in p      # pdf giant still page-split
