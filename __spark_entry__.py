@@ -342,8 +342,8 @@ def _non_blank_sql(expr: str) -> str:
 
 
 def _collapse_sql(expr: str) -> str:
-    """DuckDB mirror of collapse_series (str.split()/join(' ') — Python
-    whitespace runs -> single space, ends stripped)."""
+    """DuckDB mirror of refparser.html._collapse (str.split()/join(' ')
+    — Python whitespace runs -> single space, ends stripped)."""
     return ("array_to_string(list_filter(string_split_regex("
             f"{expr}, '{_WS_RE2}'), x -> x <> ''), ' ')")
 

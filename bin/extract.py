@@ -93,15 +93,19 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(args.output, ignore_errors=True)
 
     t0 = time.time()
-    docs = spark.read.parquet(args.input)
-    if args.raw_bytes:
-        from document_parser_spark.sources.ingest import ingest_raw_text
-        docs = ingest_raw_text(docs)
-    result = extract(docs, image_mode=args.image_mode,
-                     salt_buckets=args.salt_buckets)
-    done = lin.run_with_lineage(
-        spark, result, args.output, n_partitions=args.partitions,
-        input_files=[args.input])
+    done = []
+    # a restart with every bucket READY has nothing to commit: skip the
+    # input read and extract()'s hot-id collect and planning
+    if lin.remaining_buckets(spark, args.output, args.partitions):
+        docs = spark.read.parquet(args.input)
+        if args.raw_bytes:
+            from document_parser_spark.sources.ingest import ingest_raw_text
+            docs = ingest_raw_text(docs)
+        result = extract(docs, image_mode=args.image_mode,
+                         salt_buckets=args.salt_buckets)
+        done = lin.run_with_lineage(
+            spark, result, args.output, n_partitions=args.partitions,
+            input_files=[args.input])
     n_artifacts = n_written = None
     if args.image_mode == IMAGE_MODE_REFERENCED:
         # artifacts-dir analogue: write the media manifest beside the

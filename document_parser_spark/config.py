@@ -1,8 +1,8 @@
 """Shared constants: the single source of truth for every threshold and
 character table used by BOTH the pure-Python oracle (``refparser``) and the
-vectorized Spark kernels. Keeping them here guarantees the two independent
-implementations cannot drift on *constants* (they remain separate code paths,
-so golden tests stay meaningful).
+Spark-side code that does not call it: the JVM clean arm and the batched HTML
+stage. Keeping them here guarantees those separate code paths cannot drift on
+*constants* (golden tests check the rest).
 
 Reference parity notes (file:line into /root/reference):
   - invisible codepoint table: app/modules/parser/abc/abc.py:80-108
@@ -91,7 +91,7 @@ LINEAGE_READY = "READY"
 
 # ---------------------------------------------------------------------------
 # HTML boilerplate classification (SURVEY.md §7.3.6 — constants are ours,
-# fixed here first, mirrored by the vectorized UDF)
+# fixed here first, mirrored by the batched HTML stage)
 # ---------------------------------------------------------------------------
 
 # Subtrees dropped unconditionally (Readability-style semantic boilerplate).

@@ -1,185 +1,45 @@
-"""Vectorized text-cleaning kernels (Spark side of SURVEY.md §2.8 F2,F4-F6).
+"""Text cleaning for Spark (SURVEY.md §2.8 F2,F4-F6).
 
-Two tiers:
-  - ``clean_series`` / ``fix_series``: pandas-vectorized batch kernels used
-    inside every parse UDF (one Arrow batch crossing, C-speed string ops,
-    Python fallback only for the rows that actually contain ``/uni`` escapes
-    or mojibake lead bytes — measured <1% of real corpora).
-  - ``clean_text_column``: a pure JVM built-in chain (two ``F.translate``
-    calls) covering F5+F6 exactly, for pipelines that can prove their input
-    has no ``/uni`` escapes / mojibake; kept whole-stage-codegen friendly.
-
-Must stay bit-exact with refparser.textkernel (golden-tested).
+Two arms:
+  - the Python arm: ``refparser.textkernel``'s kernels (``clean_and_fix``,
+    ``docx_clean_and_fix``, ``clean_table_payload``) mapped over a pandas
+    Series inside an Arrow-batched stage (the pipeline's Python parse arm,
+    the html stage, the pandas UDFs below).
+  - the JVM arm: ``clean_text_column``, a built-in chain (two
+    ``F.translate`` calls) covering F5+F6 exactly, which stays inside
+    whole-stage codegen; ``needs_python_column`` flags the rows it cannot
+    clean (a ``/uni`` escape or a mojibake lead byte), which take the
+    Python arm instead.
 """
 
 from __future__ import annotations
 
-import re
+from functools import partial
 
 import pandas as pd
 
 from document_parser_spark.config import (
-    CELL_SEP,
     INVISIBLE_CODEPOINTS,
     INVISIBLE_REPLACEMENT,
     MOJIBAKE_LEAD_HI,
     MOJIBAKE_LEAD_LO,
     REPLACEMENT_CHAR,
     REPLACEMENT_FIX,
-    ROW_SEP,
-    UNI_ESCAPE_PATTERN,
 )
-from document_parser_spark.refparser.textkernel import fix_text, unescape_uni
+from document_parser_spark.refparser.textkernel import (
+    clean_and_fix,
+    clean_table_payload,
+    docx_clean_and_fix,
+)
 
-_INVISIBLE_TABLE = {ord(c): " " for c in INVISIBLE_CODEPOINTS}
 _UNI_LIT = "/uni"
 _MOJIBAKE_PAT = f"[{MOJIBAKE_LEAD_LO}-{MOJIBAKE_LEAD_HI}]"
-_UNI_RE = re.compile(UNI_ESCAPE_PATTERN)
-# clean_text is the identity unless the row carries a '/uni' literal, a
-# U+FFFD, or an invisible codepoint — one compiled scan finds the (rare)
-# dirty rows so the per-row replace/translate passes run only on those.
-# REPLACEMENT_CHAR is not in INVISIBLE_CODEPOINTS (asserted in tests), so
-# the replace + translate steps fold into ONE str.translate table.
-_CLEAN_DIRTY_RE = re.compile(
-    f"{re.escape(_UNI_LIT)}|[{re.escape(REPLACEMENT_CHAR)}"
-    f"{re.escape(INVISIBLE_CODEPOINTS)}]")
-_CLEAN_TABLE = dict(_INVISIBLE_TABLE)
-_CLEAN_TABLE[ord(REPLACEMENT_CHAR)] = REPLACEMENT_FIX
-
-
-def clean_series(s: pd.Series) -> pd.Series:
-    """clean_text over a string Series: /uniXXXX unescape, U+FFFD -> '.',
-    invisible codepoints -> ' '. NaN-safe (left as NaN)."""
-    s = s.astype("object")
-    mask = s.notna()
-    if not mask.any():
-        return s
-    vals = s[mask]
-    dirty = vals.str.contains(_CLEAN_DIRTY_RE, regex=True)
-    if not dirty.any():
-        return s
-    sub = vals[dirty.to_numpy()]
-    # /uni unescape only where the literal appears (regex needs chr(), so it
-    # stays Python — but only on the affected rows).
-    uni_mask = sub.str.contains(_UNI_LIT, regex=False)
-    if uni_mask.any():
-        sub = sub.copy()
-        sub.loc[uni_mask] = sub[uni_mask].map(unescape_uni)
-    sub = sub.str.translate(_CLEAN_TABLE)
-    arr = vals.to_numpy(copy=True)          # positional, no index alignment
-    arr[dirty.to_numpy()] = sub.to_numpy()
-    out = s.copy()
-    out[mask] = arr
-    return out
-
-
-def fix_series(s: pd.Series) -> pd.Series:
-    """to_utf8/fix_text over a string Series: mojibake repair only on rows
-    carrying a UTF-8 lead byte signature."""
-    s = s.astype("object")
-    mask = s.notna()
-    if not mask.any():
-        return s
-    vals = s[mask]
-    moji = vals.str.contains(_MOJIBAKE_PAT, regex=True)
-    if moji.any():
-        vals = vals.copy()
-        vals.loc[moji] = vals[moji].map(fix_text)
-    out = s.copy()
-    out[mask] = vals
-    return out
 
 
 def clean_and_fix_series(s: pd.Series) -> pd.Series:
-    """Full kernel in reference call-site order (clean_text then to_utf8,
-    pdf_parser.py:56-57)."""
-    return fix_series(clean_series(s))
-
-
-def nfc_series(s: pd.Series) -> pd.Series:
-    """NFC normalization over a string Series via pandas
-    ``Series.str.normalize`` (unicodedata.normalize per element — the
-    same kernel the oracle uses, batched per Arrow chunk). NaN-safe."""
-    s = s.astype("object")
-    mask = s.notna()
-    if not mask.any():
-        return s
-    out = s.copy()
-    out[mask] = s[mask].str.normalize("NFC")
-    return out
-
-
-def docx_clean_series(s: pd.Series) -> pd.Series:
-    """The DocParser text-item kernel, vectorized: NFC FIRST, then
-    clean_text, then to_utf8 (docx_parser.py:43-46)."""
-    return fix_series(clean_series(nfc_series(s)))
-
-
-def table_clean_series(s: pd.Series, fix_cells: bool) -> pd.Series:
-    """Per-cell cleaning of table payloads (ROW_SEP rows / CELL_SEP
-    cells), vectorized with the flatten -> batch-clean -> group-join
-    pattern: every cell of every payload in the Arrow batch lands in
-    ONE flat Series so the char-heavy kernels run vectorized once;
-    payloads are rebuilt with two stable group-joins.
-
-    ``fix_cells=False`` encodes the DocParser asymmetry (clean_text
-    only, docx_parser.py:47-49); ``True`` is the pdf/html/pptx/xlsx
-    cell rule (pdf_parser.py:59-62)."""
-    import numpy as np
-
-    s = s.astype("object")
-    mask = s.notna()
-    if not mask.any():
-        return s
-    vals = s[mask]
-    rows_list = vals.str.split(ROW_SEP).tolist()
-    n_rows = [len(r) for r in rows_list]
-    flat_rows = pd.Series([r for rl in rows_list for r in rl],
-                          dtype="object")
-    row_payload = np.repeat(np.arange(len(vals)), n_rows)
-    cells_list = flat_rows.str.split(CELL_SEP).tolist()
-    n_cells = [len(c) for c in cells_list]
-    flat_cells = pd.Series([c for cl in cells_list for c in cl],
-                           dtype="object")
-    cleaned = clean_series(flat_cells)
-    if fix_cells:
-        cleaned = fix_series(cleaned)
-    cell_row = np.repeat(np.arange(len(flat_rows)), n_cells)
-    rows_joined = cleaned.groupby(cell_row).agg(CELL_SEP.join)
-    payloads = rows_joined.groupby(row_payload).agg(ROW_SEP.join)
-    out = s.copy()
-    out[mask] = payloads.to_numpy()
-    return out
-
-
-# collapse is the identity unless the row starts/ends with whitespace,
-# contains a whitespace run, or contains a non-space whitespace char
-# ([^\S ]). Python's no-arg str.split() whitespace set is exactly regex
-# \s on CPython 3.11 (verified over all codepoints; asserted in tests),
-# so this scan is a sound identity test.
-_COLLAPSE_DIRTY_RE = re.compile(r"^\s|\s\s|\s$|[^\S ]")
-
-
-def _collapse_one(x: str) -> str:
-    return " ".join(x.split())
-
-
-def collapse_series(s: pd.Series) -> pd.Series:
-    """HTML whitespace collapse: runs of whitespace -> single space, strip.
-    NaN-safe (left as NaN)."""
-    mask = s.notna()
-    if not mask.any():
-        return s.astype("object") if s.dtype != object else s
-    vals = s[mask]
-    dirty = vals.str.contains(_COLLAPSE_DIRTY_RE, regex=True)
-    if not dirty.any():
-        return s
-    dnp = dirty.to_numpy()
-    arr = vals.to_numpy(copy=True)
-    arr[dnp] = [_collapse_one(x) for x in arr[dnp]]
-    out = s.astype("object").copy()
-    out[mask] = arr
-    return out
+    """``clean_and_fix`` (clean_text then to_utf8, pdf_parser.py:56-57)
+    over a string Series; NULLs stay NULL."""
+    return s.map(clean_and_fix, na_action="ignore")
 
 
 _ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -244,7 +104,7 @@ def make_docx_clean_udf():
 
     @pandas_udf("string")
     def docx_clean_udf(s: pd.Series) -> pd.Series:
-        return docx_clean_series(s)
+        return s.map(docx_clean_and_fix, na_action="ignore")
 
     return docx_clean_udf
 
@@ -253,8 +113,10 @@ def make_table_clean_udf(fix_cells: bool):
     """Scalar pandas UDF cleaning table payloads per cell."""
     from pyspark.sql.functions import pandas_udf
 
+    kernel = partial(clean_table_payload, fix_cells=fix_cells)
+
     @pandas_udf("string")
     def table_clean_udf(s: pd.Series) -> pd.Series:
-        return table_clean_series(s, fix_cells)
+        return s.map(kernel, na_action="ignore")
 
     return table_clean_udf

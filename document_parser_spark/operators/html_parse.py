@@ -8,10 +8,11 @@ golden-tested against):
      the whole Arrow batch: block metadata, inline text chunks (with link
      attribution), code payloads, and table cells, each keyed by
      (row_in_batch, block_seq).
-  2. Vectorized post-processing over those flat tables with pandas/numpy:
-     text cleaning (functions.cleaning, C-speed string ops over ALL chunks of
-     the batch at once), whitespace collapse, link-density boilerplate
-     classification, and cell/row/table assembly via ordered group-joins.
+  2. Post-processing over those flat tables with pandas/numpy: the oracle's
+     own text kernels (``refparser.textkernel.clean_and_fix`` and
+     ``refparser.html._collapse``) mapped over all chunks of the batch,
+     link-density boilerplate classification, and cell/row/table assembly
+     via ordered group-joins.
 
 Reference parity: reproduces the behavior of Docling HTML conversion + the
 reference's cleaning walk (html_parser.py:37-57) as specified by the
@@ -36,10 +37,8 @@ from document_parser_spark.config import (
     ROW_SEP,
     VOID_TAGS,
 )
-from document_parser_spark.functions.cleaning import (
-    clean_and_fix_series,
-    collapse_series,
-)
+from document_parser_spark.refparser.html import _collapse
+from document_parser_spark.refparser.textkernel import clean_and_fix
 
 _BLOCK_TAGS = frozenset({
     "p", "h1", "h2", "h3", "h4", "h5", "h6", "li", "pre", "table",
@@ -710,8 +709,8 @@ def _new_out() -> dict:
 def parse_html_rows(htmls: pd.Series) -> pd.DataFrame:
     """Parse a batch of HTML strings -> flat block table
     ``(row, seq, kind, text, media_ref)`` sorted by (row, seq). ``row`` is the
-    positional index into ``htmls``. All text processing is vectorized across
-    the whole batch."""
+    positional index into ``htmls``. Text cleaning and collapse run once
+    over each flat table of the whole batch."""
     out = _new_out()
     emitter = _FlatEmitter(out)
     for i, html in enumerate(htmls):
@@ -729,13 +728,13 @@ def parse_html_rows(htmls: pd.Series) -> pd.DataFrame:
         cdf = pd.DataFrame({"row": out["c_row"], "seq": out["c_seq"],
                             "ord": out["c_ord"], "text": out["c_text"],
                             "link": out["c_link"]})
-        cdf["clean"] = clean_and_fix_series(cdf["text"])
+        cdf["clean"] = cdf["text"].map(clean_and_fix, na_action="ignore")
         # link-char counts need the collapsed length only for link chunks
         link_mask = cdf["link"].to_numpy()
         link_chars = np.zeros(len(cdf), dtype=np.int64)
         if link_mask.any():
-            link_chars[link_mask] = collapse_series(
-                cdf["clean"][link_mask]).str.len().to_numpy()
+            link_chars[link_mask] = cdf["clean"][link_mask].map(
+                _collapse, na_action="ignore").str.len().to_numpy()
         cdf["link_chars"] = link_chars
         cdf = _sorted_by(cdf, ["row", "seq", "ord"])
         keys, joined, starts = _group_join(
@@ -745,7 +744,7 @@ def parse_html_rows(htmls: pd.Series) -> pd.DataFrame:
             if len(starts) else np.array([], dtype=np.int64)
         runs = pd.DataFrame({"row": keys[0], "seq": keys[1],
                              "text": joined, "links": links})
-        runs["text"] = collapse_series(runs["text"])
+        runs["text"] = runs["text"].map(_collapse, na_action="ignore")
         n = runs["text"].str.len()
         boiler = ((runs["links"] > 0) & (n < MIN_BLOCK_CHARS_WITH_LINKS)) | \
                  ((n > 0) & (runs["links"] / n.where(n > 0, 1) > LINK_DENSITY_MAX))
@@ -758,7 +757,8 @@ def parse_html_rows(htmls: pd.Series) -> pd.DataFrame:
     if out["k_row"]:
         kdf = pd.DataFrame({"row": out["k_row"], "seq": out["k_seq"],
                             "text": out["k_text"]})
-        kdf["text"] = clean_and_fix_series(kdf["text"]).str.strip("\n")
+        kdf["text"] = kdf["text"].map(
+            clean_and_fix, na_action="ignore").str.strip("\n")
         kdf = kdf[kdf["text"].str.strip() != ""]
         kdf["kind"] = "code"
         kdf["media_ref"] = ""
@@ -769,12 +769,12 @@ def parse_html_rows(htmls: pd.Series) -> pd.DataFrame:
         tdf = pd.DataFrame({"row": out["t_row"], "seq": out["t_seq"],
                             "tr": out["t_tr"], "cell": out["t_cell"],
                             "ord": out["t_ord"], "text": out["t_text"]})
-        tdf["clean"] = clean_and_fix_series(tdf["text"])
+        tdf["clean"] = tdf["text"].map(clean_and_fix, na_action="ignore")
         tdf = _sorted_by(tdf, ["row", "seq", "tr", "cell", "ord"])
         ckeys, ctext, _ = _group_join(
             [tdf[c].to_numpy() for c in ("row", "seq", "tr", "cell")],
             tdf["clean"].to_numpy())
-        ctext = collapse_series(pd.Series(ctext)).to_numpy()
+        ctext = pd.Series(ctext).map(_collapse, na_action="ignore").to_numpy()
         rkeys, rtext, _ = _group_join(ckeys[:3], ctext, sep=CELL_SEP)
         tkeys, ttext, _ = _group_join(rkeys[:2], rtext, sep=ROW_SEP)
         tables = pd.DataFrame({"row": tkeys[0], "seq": tkeys[1],

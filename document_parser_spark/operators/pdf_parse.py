@@ -1,212 +1,81 @@
-"""Batched PDF layout parsing for Spark (`mapInPandas` over whole documents).
+"""Arrow-batched pdf parsing for Spark: the ``refparser.pdf`` kernels,
+called inside ``mapInPandas`` / ``applyInPandas`` stages.
 
-PDF reading order is a *document-level* computation (lines re-sort across the
-whole page), so this branch consumes unexploded ``(doc_id, spans)`` rows with
-spans pre-pruned to ``pdf_line`` — avoiding a per-span explode+regroup shuffle
-for the PDF family entirely. Inside the batch:
-  - coordinate parsing is vectorized with pandas ``.str`` ops over every line
-    of every doc at once (``"<page>;<x0>;<y0>;<x1>;<y1>|<text>"``);
-  - text cleaning is vectorized over all lines at once;
-  - per-(doc, page) column split / y-gap clustering / reading-order sort run
-    on small numpy slices (tens of lines each).
+PDF reading order is a *document-level* computation (lines re-sort across
+the whole page), so the doc-level stage consumes unexploded
+``(doc_id, spans)`` rows with spans pruned to ``pdf_line`` and sorted by
+offset (``plans.pipeline.parse_all_branches``) — no per-span explode and
+regroup shuffle for the pdf family — and calls ``parse_pdf_lines`` once
+per doc. The VLM arm (``pdf_vlm_branch``) is the same batch loop with
+``parse_vlm_lines`` as the kernel. Giant docs take the per-page stage
+(``pdf_branch_paged``), which calls ``parse_pdf_lines`` once per
+(doc, page) group: column split, y-gap clustering, median height and
+headings are per-page computations in the oracle too.
 
-Reference parity: reproduces Docling's page->block->line grouping behavior
-(pdf_parser.py:31-43) as specified by refparser.pdf; thresholds in config.py.
+Reference parity: Docling's page->block->line grouping
+(pdf_parser.py:31-43) and the VLM whole-doc conversion
+(pdf_parser_vlm.py:100-135), as specified by refparser.pdf.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 
-from document_parser_spark.config import COLUMN_GAP_FRACTION, Y_GAP_FACTOR
-from document_parser_spark.functions.cleaning import clean_and_fix_series
-from document_parser_spark.refparser.pdf import COORD_MAX_DIGITS
-from document_parser_spark.schema import FAIL_KIND
+from document_parser_spark.refparser.pdf import (
+    parse_pdf_lines,
+    parse_vlm_lines,
+)
+from document_parser_spark.schema import FAIL_KIND, PARSED_SCHEMA
 
 
-def _split_columns_np(x0: np.ndarray, x1: np.ndarray) -> np.ndarray:
-    """Column id (0/1) per line; all zeros when the page is single-column."""
-    xs = np.unique(x0)
-    if len(xs) < 2:
-        return np.zeros(len(x0), dtype=np.int8)
-    extent = x1.max() - xs.min()
-    if extent <= 0:
-        return np.zeros(len(x0), dtype=np.int8)
-    gaps = np.diff(xs)
-    gi = int(np.argmax(gaps))
-    if gaps[gi] <= COLUMN_GAP_FRACTION * extent:
-        return np.zeros(len(x0), dtype=np.int8)
-    split = (xs[gi] + xs[gi + 1]) / 2.0
-    return (x0 >= split).astype(np.int8)
+def _parse_docs(doc_ids, spans_col, kernel) -> pd.DataFrame:
+    """(doc_id, pdf-only spans in offset order) -> PARSED_SCHEMA rows:
+    the kernel's blocks at ord1 0.., then one ``__fail__`` row per
+    failure at a DISTINCT negative ord1 -(f+1) (the reassembly salt
+    hashes (ord0, ord1), so a constant would pin every malformed line
+    of a doc into one salt bucket). Every row is anchored at the doc's
+    least non-NULL offset, 0 when all are NULL (never throw, A4)."""
+    rows = []
+    for doc_id, spans in zip(doc_ids, spans_col):
+        anchor = min((sp["offset"] for sp in spans
+                      if sp["offset"] is not None), default=0)
+        blocks, n_fail = kernel([sp["text"] or "" for sp in spans])
+        rows += [(doc_id, anchor, j, kind, text, media)
+                 for j, (kind, text, media) in enumerate(blocks)]
+        rows += [(doc_id, anchor, -(f + 1), FAIL_KIND, None, None)
+                 for f in range(n_fail)]
+    return pd.DataFrame(rows, columns=PARSED_SCHEMA.fieldNames()).astype(
+        {"ord0": "int32", "ord1": "int32"})
 
 
-def _median(a: np.ndarray) -> float:
-    """statistics.median parity (average of the two middles for even n)."""
-    return float(np.median(a)) if len(a) else 1.0
+def parse_pdf_batch(doc_ids, spans_col) -> pd.DataFrame:
+    """The layout kernel over a batch of docs (see ``_parse_docs``)."""
+    return _parse_docs(doc_ids, spans_col, parse_pdf_lines)
 
 
-def parse_pdf_doc_lines(
-    page: np.ndarray, x0: np.ndarray, y0: np.ndarray, x1: np.ndarray,
-    y1: np.ndarray, clean_text: np.ndarray,
-) -> list[tuple[str, str, str]]:
-    """One document's valid lines -> ordered blocks (kind, text, media_ref),
-    page_break spans included. clean_text is already cleaned+stripped."""
-    out: list[tuple[str, str, str]] = []
-    for pi, pg in enumerate(np.unique(page)):
-        if pi > 0:
-            out.append(("page_break", "", ""))
-        sel = page == pg
-        px0, px1 = x0[sel], x1[sel]
-        py0, py1 = y0[sel], y1[sel]
-        ptxt = clean_text[sel]
-        heights = py1 - py0
-        med = _median(heights)
-        if med <= 0:
-            med = 1.0
-        cols = _split_columns_np(px0, px1)
-        for col in (0, 1):
-            m = cols == col
-            if not m.any():
-                continue
-            order = np.lexsort((px0[m], -py1[m]))
-            cy0, cy1 = py0[m][order], py1[m][order]
-            ch = heights[m][order]
-            ct = ptxt[m][order]
-            # whitespace gap above each line vs the previous line's bottom
-            new_block = np.ones(len(order), dtype=bool)
-            if len(order) > 1:
-                gaps = cy0[:-1] - cy1[1:]
-                new_block[1:] = gaps > Y_GAP_FACTOR * med
-            block_id = np.cumsum(new_block)
-            for b in np.unique(block_id):
-                bm = block_id == b
-                texts = [t for t in ct[bm] if t]
-                if not texts:
-                    continue
-                text = " ".join(texts)
-                kind, media = "text", ""
-                if int(bm.sum()) == 1:
-                    h = float(ch[bm][0])
-                    if h >= 2.0 * med:
-                        kind, media = "heading", "h1"
-                    elif h >= 1.5 * med:
-                        kind, media = "heading", "h2"
-                out.append((kind, text, media))
-    return out
-
-
-def parse_payloads(s: pd.Series):
-    """Vectorized pdf_line payload parsing shared by the doc-level and
-    per-page kernels: -> (nums 5-col DataFrame, valid bool ndarray,
-    cleaned text ndarray)."""
-    parts = s.str.partition("|")
-    has_sep = parts[1] == "|"
-    coords = parts[0].str.split(";", expand=True)
-    if coords.shape[1] < 5:
-        for k in range(coords.shape[1], 5):
-            coords[k] = None
-    nums = coords[[0, 1, 2, 3, 4]].apply(pd.to_numeric, errors="coerce")
-    # exactly five integer fields and the | separator
-    valid = has_sep & nums.notna().all(axis=1)
-    if coords.shape[1] > 5:
-        valid &= coords[list(range(5, coords.shape[1]))].isna().all(axis=1)
-    # reject floats / non-integer strings (reference regex-free int() parse)
-    valid &= ~coords[[0, 1, 2, 3, 4]].apply(
-        lambda c: c.str.contains(r"[^0-9+-]", na=True)).any(axis=1)
-    # magnitude bound (grammar): accepted values must stay < 10^15 <
-    # 2^53 — to_numeric falls back to float64 whenever any row in the
-    # batch coerces to NaN, and an integer above 2^53 would round here
-    # while the oracle's arbitrary-precision int() keeps it exact
-    # (r4 ADVICE). COORD_MAX_DIGITS is refparser.pdf's cap, shared.
-    valid &= ~coords[[0, 1, 2, 3, 4]].apply(
-        lambda c: c.str.replace(r"^[+-]", "", regex=True)
-                   .str.len().gt(COORD_MAX_DIGITS)).any(axis=1)
-    cleaned = clean_and_fix_series(parts[2]).str.strip().to_numpy()
-    return nums, valid.to_numpy(), cleaned
-
-
-def parse_pdf_batch(doc_ids: np.ndarray, spans_col) -> pd.DataFrame:
-    """Batch of (doc_id, pdf-only spans) -> parsed rows
-    (doc_id, ord0, ord1, kind, text, media_ref) incl. __fail__ tallies."""
-    rows_doc: list[int] = []
-    payloads: list[str] = []
-    anchors = np.empty(len(doc_ids), dtype=np.int64)
-    for i, spans in enumerate(spans_col):
-        anchor = None
-        for sp in spans:
-            off = sp["offset"]
-            # NULL offsets don't anchor (mixed NULL/non-NULL must not
-            # throw — A4 never-throw posture; matches the paged path's
-            # JVM F.min, which ignores NULLs and coalesces to 0)
-            if off is not None and (anchor is None or off < anchor):
-                anchor = off
-            rows_doc.append(i)
-            payloads.append(sp["text"] or "")
-        anchors[i] = anchor if anchor is not None else 0
-
-    out = {"doc_id": [], "ord0": [], "ord1": [], "kind": [], "text": [],
-           "media_ref": []}
-    if not payloads:
-        return pd.DataFrame(out)
-
-    nums, vmask, cleaned = parse_payloads(pd.Series(payloads, dtype="object"))
-    doc_arr = np.asarray(rows_doc)
-    cols = [nums[k].to_numpy() for k in range(5)]
-    # rows_doc is appended doc-by-doc, so doc_arr is NONDECREASING:
-    # each doc's rows are one contiguous slice found by two binary
-    # searches. The previous `doc_arr == i` mask re-scanned the whole
-    # batch per doc — O(n_docs * n_spans) elementwise comparisons,
-    # ~10^10 for a 10k-doc/1M-line Arrow batch (review-caught).
-    idx = np.arange(len(doc_ids))
-    starts = np.searchsorted(doc_arr, idx, side="left")
-    ends = np.searchsorted(doc_arr, idx, side="right")
-
-    for i in range(len(doc_ids)):
-        sl = slice(starts[i], ends[i])
-        vm = vmask[sl]
-        n_fail = int((~vm).sum())
-        blocks: list[tuple[str, str, str]] = []
-        if vm.any():
-            blocks = parse_pdf_doc_lines(
-                cols[0][sl][vm], cols[1][sl][vm], cols[2][sl][vm],
-                cols[3][sl][vm], cols[4][sl][vm], cleaned[sl][vm],
-            )
-        anchor = int(anchors[i])
-        for j, (kind, text, media) in enumerate(blocks):
-            out["doc_id"].append(doc_ids[i])
-            out["ord0"].append(anchor)
-            out["ord1"].append(j)
-            out["kind"].append(kind)
-            out["text"].append(text)
-            out["media_ref"].append(media)
-        for f in range(n_fail):
-            out["doc_id"].append(doc_ids[i])
-            out["ord0"].append(anchor)
-            out["ord1"].append(-(f + 1))
-            out["kind"].append(FAIL_KIND)
-            out["text"].append(None)
-            out["media_ref"].append(None)
-    return pd.DataFrame(out)
-
-
-def pdf_branch(docs_df):
-    """Spark stage: (doc_id, spans pruned to pdf_line) -> PARSED_SCHEMA rows."""
-    from document_parser_spark.schema import PARSED_SCHEMA
-
+def _doc_branch(docs_df, kernel):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            res = parse_pdf_batch(pdf["doc_id"].to_numpy(), pdf["spans"])
+            res = _parse_docs(pdf["doc_id"], pdf["spans"], kernel)
             if len(res):
-                res["ord0"] = res["ord0"].astype("int32")
-                res["ord1"] = res["ord1"].astype("int32")
                 yield res
 
     return docs_df.mapInPandas(run, schema=PARSED_SCHEMA)
+
+
+def pdf_branch(docs_df):
+    """Spark stage: (doc_id, pdf_line spans in offset order) ->
+    PARSED_SCHEMA rows via the layout pipeline."""
+    return _doc_branch(docs_df, parse_pdf_lines)
+
+
+def pdf_vlm_branch(docs_df):
+    """Spark stage: the VLM whole-doc conversion (no per-line cleaning,
+    one page per block, ONE malformed line fails the doc -> a single
+    ``__fail__`` row; ``refparser.pdf.parse_vlm_lines``)."""
+    return _doc_branch(docs_df, parse_vlm_lines)
 
 
 _PAGED_KERNEL_SCHEMA = ("doc_id string, anchor int, page long, idx int, "
@@ -215,55 +84,30 @@ _PAGED_KERNEL_SCHEMA = ("doc_id string, anchor int, page long, idx int, "
 
 def _paged_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     """One (doc_id, page) group of exploded pdf_line payloads ->
-    per-page blocks. Semantics identical to the single-page slice of
-    ``parse_pdf_doc_lines`` (clustering, median height, and headings
-    are per-page computations in the doc-level kernel too):
+    per-page blocks from ``parse_pdf_lines``:
 
       * idx -1 = a page_break marker for every PRESENT page (>= 1
-        valid line) — the downstream plan drops the doc's first one,
+        line parsed) — the downstream plan drops the doc's first one,
         reproducing the between-pages placement;
       * idx 0.. = the page's blocks in reading order;
       * one kind='__fail__' row per malformed line (idx -2; downstream
         maps each to a DISTINCT negative ord1 so the reassembly salt
         spreads them — fail rows are tallied and stripped by
         reassembly, their relative order is irrelevant)."""
-    from document_parser_spark.schema import FAIL_KIND as _FK
-
-    doc_id = pdf["doc_id"].iloc[0]
-    anchor = int(pdf["anchor"].iloc[0])
-    pg = pdf["page"].iloc[0]
-    pg = None if pd.isna(pg) else int(pg)
-    # restore span order: groupBy delivers rows in shuffle-arrival
-    # order, but the layout sort breaks coordinate ties by input
-    # order, so the kernel must see lines exactly as the doc-level
-    # path does — in span-array order
+    # restore line order: groupBy delivers rows in shuffle-arrival
+    # order, but the layout sort breaks coordinate ties by input order
     pdf = pdf.sort_values("pos", kind="stable")
-    nums, vmask, cleaned = parse_payloads(
-        pdf["payload"].reset_index(drop=True))
-    out = {"doc_id": [], "anchor": [], "page": [], "idx": [],
-           "kind": [], "text": [], "media_ref": []}
-
-    def emit(idx, kind, text, media):
-        out["doc_id"].append(doc_id)
-        out["anchor"].append(anchor)
-        out["page"].append(pg)
-        out["idx"].append(idx)
-        out["kind"].append(kind)
-        out["text"].append(text)
-        out["media_ref"].append(media)
-
-    if vmask.any():
-        emit(-1, "page_break", "", "")
-        blocks = parse_pdf_doc_lines(
-            nums[0].to_numpy()[vmask], nums[1].to_numpy()[vmask],
-            nums[2].to_numpy()[vmask], nums[3].to_numpy()[vmask],
-            nums[4].to_numpy()[vmask], cleaned[vmask],
-        )
-        for j, (kind, text, media) in enumerate(blocks):
-            emit(j, kind, text, media)
-    for _ in range(int((~vmask).sum())):
-        emit(-2, _FK, None, None)
-    return pd.DataFrame(out)
+    blocks, n_fail = parse_pdf_lines(pdf["payload"].tolist())
+    rows = [(-1, "page_break", "", "")] if n_fail < len(pdf) else []
+    rows += [(j, kind, text, media)
+             for j, (kind, text, media) in enumerate(blocks)]
+    rows += [(-2, FAIL_KIND, None, None)] * n_fail
+    out = pd.DataFrame(rows, columns=["idx", "kind", "text", "media_ref"])
+    pg = pdf["page"].iloc[0]
+    out.insert(0, "page", None if pd.isna(pg) else int(pg))
+    out.insert(0, "anchor", int(pdf["anchor"].iloc[0]))
+    out.insert(0, "doc_id", pdf["doc_id"].iloc[0])
+    return out
 
 
 def pdf_branch_paged(lines_df):
@@ -274,9 +118,10 @@ def pdf_branch_paged(lines_df):
 
     ``lines_df``: exploded hot-doc pdf lines
     (doc_id, anchor:int = min span offset of the doc's pdf family
-    (0 when all NULL), pos:int = span-array position (the kernel
-    sorts its group by it — coordinate-tied lines must break ties in
-    span order, identically to the doc-level kernel),
+    (0 when all NULL), pos:int = the line's rank in the doc's
+    offset-sorted pdf spans (the kernel sorts its group by it —
+    coordinate-tied lines must break ties in offset order, as the
+    oracle and the doc-level stage do),
     page:long = JVM regexp-extracted page field (NULL for lines whose
     page field already violates the grammar — those can only be
     malformed, so WHERE they land only affects which group tallies
@@ -296,11 +141,9 @@ def pdf_branch_paged(lines_df):
     gaps after the page_break drop — reassembly only sorts by them."""
     from pyspark.sql import Window, functions as F
 
-    from document_parser_spark.schema import FAIL_KIND as _FK
-
     parsed = (lines_df.groupBy("doc_id", "page")
               .applyInPandas(_paged_kernel, schema=_PAGED_KERNEL_SCHEMA))
-    is_fail = F.col("kind") == _FK
+    is_fail = F.col("kind") == FAIL_KIND
     w_doc = Window.partitionBy("doc_id")
     w_ord = Window.partitionBy("doc_id").orderBy(
         is_fail.cast("int"), "page", "idx")

@@ -1,132 +1,28 @@
-"""Batched markdown serialization for Spark (SURVEY.md §2.9 F10-F15).
+"""Markdown serialization for Spark (SURVEY.md §2.9 F10-F15).
 
-A scalar pandas UDF over the reassembled ``spans`` array column. Inside each
-Arrow batch the spans of ALL documents are flattened into one table; chunk
-rendering (heading prefixes, list bullets, fences, placeholders) and the
-separator logic (blank line, list adjacency, page-break placeholder) are
-computed as vectorized numpy selects; the final markdown strings come from a
-single ordered group-join. Tables (rare) render via a per-span map.
-
-Golden-tested against refparser.serialize; placeholders in config.py
-(page break: abc/abc.py:30, image placeholder mode: abc/abc.py:27).
+A scalar pandas UDF over the reassembled ``spans`` array column: each
+Arrow batch crosses into Python once, and ``refparser.serialize``'s
+``serialize_markdown`` renders every doc of the batch (placeholders in
+config.py; page break: abc/abc.py:30, image placeholder mode:
+abc/abc.py:27).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
-from document_parser_spark.config import (
-    IMAGE_MODE_PLACEHOLDER,
-    IMAGE_PLACEHOLDER,
-    PAGE_BREAK_PLACEHOLDER,
-)
-from document_parser_spark.refparser.serialize import (
-    _HEADING_REF_RE,
-    _LIST_REF_RE,
-    LIST_DEPTH_MAX,
-    serialize_table,
-)
+from document_parser_spark.config import IMAGE_MODE_PLACEHOLDER
+from document_parser_spark.refparser.serialize import serialize_markdown
 
 
 def serialize_batch(spans_series: pd.Series, image_mode: str) -> pd.Series:
-    """Series of span lists (dicts with kind/text/media_ref, already in final
-    order) -> Series of markdown strings."""
-    doc_idx: list[int] = []
-    kinds: list[str] = []
-    texts: list[str] = []
-    medias: list[str] = []
-    for i, spans in enumerate(spans_series):
-        if spans is None:
-            continue
-        for sp in spans:
-            doc_idx.append(i)
-            kinds.append(sp["kind"])
-            texts.append(sp["text"] or "")
-            medias.append(sp["media_ref"] or "")
-
-    n_docs = len(spans_series)
-    if not doc_idx:
-        return pd.Series([""] * n_docs, dtype="object")
-
-    df = pd.DataFrame({"doc": doc_idx, "kind": kinds, "text": texts,
-                       "media": medias})
-    kind = df["kind"].to_numpy()
-    text = df["text"].astype("object")
-    media = df["media"].astype("object")
-
-    rendered = text.copy()
-
-    # heading/list media_ref grammars: the STRICT regexes shared with
-    # the oracle (refparser.serialize._HEADING_REF_RE/_LIST_REF_RE) —
-    # any non-matching ref falls back identically on both sides
-    # (review-caught: the arms previously disagreed on 'h7', 'li:o',
-    # 'li:o:1:x', float depths)
-    m = kind == "heading"
-    if m.any():
-        levels = (pd.to_numeric(
-            media[m].str.extract(_HEADING_REF_RE, expand=False),
-            errors="coerce").fillna(1).clip(1, 6).astype(int))
-        rendered[m] = levels.map(lambda v: "#" * v) + " " + text[m]
-
-    m = kind == "list_item"
-    if m.any():
-        parts = media[m].str.extract(_LIST_REF_RE)
-        matched = parts[0].notna()
-        marker = parts[1].where(matched, "u")
-        depth = (pd.to_numeric(parts[2], errors="coerce").fillna(0)
-                 .clip(0, LIST_DEPTH_MAX).astype(int))
-        bullet = np.where(marker == "o", "1.", "-")
-        indent = depth.map(lambda d: "  " * d)
-        rendered[m] = indent + bullet + " " + text[m]
-
-    m = kind == "table"
-    if m.any():
-        rendered[m] = text[m].map(serialize_table)
-
-    m = kind == "code"
-    if m.any():
-        rendered[m] = "```\n" + text[m] + "\n```"
-
-    m = kind == "image"
-    if m.any():
-        if image_mode == IMAGE_MODE_PLACEHOLDER:
-            rendered[m] = IMAGE_PLACEHOLDER
-        else:
-            rendered[m] = "![](" + media[m] + ")"
-
-    is_pb = kind == "page_break"
-    rendered[is_pb] = PAGE_BREAK_PLACEHOLDER
-
-    # drop ONLY empty-rendered tables (the oracle's sole skip): an
-    # empty 'text' or unknown-kind chunk still contributes its '\n\n'
-    # separator and resets list adjacency, exactly as the oracle's
-    # chunk loop appends it (review-caught: dropping every
-    # empty-rendered block changed the separators around it)
-    keep = (kind != "table") | (rendered.to_numpy() != "")
-    df = df[keep]
-    rendered = rendered[keep]
-    kind = df["kind"].to_numpy()
-    is_pb = kind == "page_break"
-    doc = df["doc"].to_numpy()
-
-    # separators: none for the first block of a page (doc start or after a
-    # page break), '\n' between adjacent list items, blank line otherwise
-    first_of_doc = np.ones(len(df), dtype=bool)
-    first_of_doc[1:] = doc[1:] != doc[:-1]
-    prev_kind = np.roll(kind, 1)
-    after_pb = np.zeros(len(df), dtype=bool)
-    after_pb[1:] = is_pb[:-1]
-    list_adj = (kind == "list_item") & (prev_kind == "list_item")
-    sep = np.where(first_of_doc | after_pb | is_pb, "",
-                   np.where(list_adj, "\n", "\n\n"))
-
-    parts = pd.Series(sep, index=rendered.index, dtype="object") + rendered
-    md = parts.groupby(doc).agg("".join)
-
-    out = pd.Series([""] * n_docs, dtype="object")
-    out.iloc[md.index] = md.to_numpy()
-    return out
+    """Series of span arrays (dicts with kind/text/media_ref, already in
+    final order) -> Series of markdown strings; a NULL array is ""."""
+    return pd.Series([
+        "" if spans is None else serialize_markdown(
+            [(sp["kind"], sp["text"], sp["media_ref"]) for sp in spans],
+            image_mode)
+        for spans in spans_series], index=spans_series.index, dtype="object")
 
 
 def make_serialize_udf(image_mode: str = IMAGE_MODE_PLACEHOLDER):

@@ -10,7 +10,7 @@
            └─ Python branch (ONE mapInPandas pass): html DOM parse +
               every kernel that needs Python (/uni-or-mojibake text,
               docx NFC tier, per-cell table cleaning), dispatched by a
-              vectorized per-kind groupby INSIDE the batch
+              per-kind groupby INSIDE the batch
       + one presence marker per doc (so fully-dropped docs surface as 'empty')
     -> unionByName -> salted ordered reassembly -> serializer UDF -> output
 
@@ -43,7 +43,11 @@ from document_parser_spark.functions.cleaning import (
     clean_text_column,
     needs_python_column,
 )
-from document_parser_spark.operators.pdf_parse import pdf_branch
+from document_parser_spark.operators.pdf_parse import (
+    pdf_branch,
+    pdf_branch_paged,
+    pdf_vlm_branch,
+)
 from document_parser_spark.refparser.pdf import COORD_MAX_DIGITS
 from document_parser_spark.operators.reassemble import (
     DOC_MARKER_KIND,
@@ -99,40 +103,51 @@ def _python_parse_branch(src: DataFrame) -> DataFrame:
     NFC->clean->fix), and per-cell table cleaning with the DocParser
     asymmetry (docx cells clean-only, generic cells clean+fix).
 
-    Dispatch is a vectorized per-kind ``groupby`` INSIDE each Arrow
-    batch — per-kind union arms would each re-scan the input table
-    (Catalyst duplicates the subtree per arm), while a batch-side
-    groupby pays one scan and keeps every kernel batched.
+    Dispatch is a per-kind ``groupby`` INSIDE each Arrow batch — per-kind
+    union arms would each re-scan the input table (Catalyst duplicates
+    the subtree per arm), while a batch-side groupby pays one scan. Each
+    one-to-one kind maps its ``refparser.textkernel`` kernel over the
+    group's Series.
     Input: doc_id, offset, kind, text. Output: PARSED_SCHEMA.
     """
+    from functools import partial
+
     import numpy as np
     import pandas as pd
 
-    from document_parser_spark.functions.cleaning import (
-        clean_and_fix_series,
-        docx_clean_series,
-        table_clean_series,
-    )
     from document_parser_spark.operators.html_parse import parse_html_rows
+    from document_parser_spark.refparser.textkernel import (
+        clean_and_fix,
+        clean_table_payload,
+        docx_clean_and_fix,
+    )
     from document_parser_spark.schema import PARSED_SCHEMA
 
-    ws_del = {ord(c): None for c in PY_WHITESPACE}
+    # kind -> (kernel, output kind, drop blank results)
+    one2one = {
+        "text": (clean_and_fix, "text", True),
+        "docx": (docx_clean_and_fix, "text", True),
+        "docx_table": (partial(clean_table_payload, fix_cells=False),
+                       "table", False),
+        "table": (partial(clean_table_payload, fix_cells=True),
+                  "table", False),
+    }
 
-    def _one2one(grp: pd.DataFrame, cleaned: pd.Series, out_kind: str,
-                 drop_blank: bool) -> pd.DataFrame:
+    def _one2one(grp: pd.DataFrame, kind: str) -> pd.DataFrame:
+        kernel, out_kind, drop_blank = one2one[kind]
+        # a NULL payload is the empty payload (the oracle's NULL-text
+        # contract): a blank text/docx span, an empty table
+        cleaned = grp["text"].fillna("").map(kernel).to_numpy()
         keep = np.ones(len(grp), dtype=bool)
         if drop_blank:
-            # reference blank test (F8): `if not text.strip()` — Python
-            # whitespace semantics via the shared PY_WHITESPACE set
-            keep = (cleaned.notna()
-                    & (cleaned.str.translate(ws_del).str.len() > 0)
-                    ).to_numpy()
+            # reference blank test (F8): `if not text.strip()`
+            keep = np.array([t.strip() != "" for t in cleaned], dtype=bool)
         return pd.DataFrame({
             "doc_id": grp["doc_id"].to_numpy()[keep],
             "ord0": grp["offset"].to_numpy()[keep].astype("int32"),
             "ord1": np.zeros(int(keep.sum()), dtype="int32"),
             "kind": out_kind,
-            "text": cleaned.to_numpy()[keep],
+            "text": cleaned[keep],
             "media_ref": "",
         })
 
@@ -153,32 +168,9 @@ def _python_parse_branch(src: DataFrame) -> DataFrame:
 
     def run(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
             for kind, grp in pdf.groupby("kind", sort=False):
                 grp = grp.reset_index(drop=True)
-                if kind == "html":
-                    out = _html(grp)
-                elif kind == "text":
-                    out = _one2one(grp, clean_and_fix_series(grp["text"]),
-                                   "text", drop_blank=True)
-                elif kind == "docx":
-                    out = _one2one(grp, docx_clean_series(grp["text"]),
-                                   "text", drop_blank=True)
-                elif kind == "docx_table":
-                    # NULL payload == empty payload (the oracle's
-                    # NULL-text contract): without fillna the cleaned
-                    # NULL survives drop_blank=False and emits a
-                    # NULL-text output span the oracle never produces
-                    out = _one2one(grp,
-                                   table_clean_series(
-                                       grp["text"].fillna(""), False),
-                                   "table", drop_blank=False)
-                else:  # "table"
-                    out = _one2one(grp,
-                                   table_clean_series(
-                                       grp["text"].fillna(""), True),
-                                   "table", drop_blank=False)
+                out = _html(grp) if kind == "html" else _one2one(grp, kind)
                 if len(out):
                     yield out
 
@@ -263,21 +255,26 @@ def parse_all_branches(df: DataFrame, pdf_vlm: bool = False,
         .select("doc_id", "offset", "kind", "text")
     )
 
+    # a doc's pdf_line spans in OFFSET order — the order the oracle lays
+    # them out in — with NULL offsets last and ties kept in array order,
+    # sorted once here for all three pdf stages (the paged path's
+    # posexplode position is then the offset rank)
+    pdf_lines = F.filter("spans", lambda s: s["kind"] == "pdf_line")
+    by_offset = F.transform(
+        F.array_sort(F.transform(pdf_lines, lambda s, i: F.struct(
+            s["offset"].isNull().alias("null_off"),
+            s["offset"].alias("off"), i.alias("pos"), s.alias("span")))),
+        lambda k: k["span"])
     pdf_docs = (
         df.filter(F.exists("spans", lambda s: s["kind"] == "pdf_line"))
-        .select("doc_id", F.filter(
-            "spans", lambda s: s["kind"] == "pdf_line").alias("spans"))
+        .select("doc_id", by_offset.alias("spans"))
     )
     if pdf_vlm:
-        from document_parser_spark.operators.pdf_vlm import pdf_vlm_branch
         pdf_rows = pdf_vlm_branch(pdf_docs)
         # (the VLM parser concatenates whole pages — a giant doc fails
         # its raises_on_error contract long before pandas memory does,
         # so no per-page fork here)
     elif hot_ids:
-        from document_parser_spark.operators.pdf_parse import (
-            pdf_branch_paged,
-        )
         tagged = with_hot_flag(pdf_docs, hot_ids)
         cold_pdf = tagged.filter(~F.col(HOT_COL)).select("doc_id", "spans")
         # anchor falls back to 0 for a doc whose pdf offsets are all
@@ -289,11 +286,10 @@ def parse_all_branches(df: DataFrame, pdf_vlm: bool = False,
             "doc_id", "spans", F.coalesce(
                 F.array_min(F.transform("spans", lambda s: s["offset"])),
                 F.lit(0)).alias("anchor"))
-        # posexplode: the span-array position rides along so the
-        # per-page kernel can restore SPAN order inside its group —
-        # groupBy shuffle arrival order is nondeterministic, and the
-        # layout sort breaks coordinate ties by input order, which
-        # must mean span order exactly as in the doc-level kernel
+        # posexplode: the offset rank rides along so the per-page
+        # kernel can restore line order inside its group — groupBy
+        # shuffle arrival order is nondeterministic, and the layout sort
+        # breaks coordinate ties by input order
         lines = (hot_pdf.select(
             "doc_id", "anchor",
             F.posexplode(F.transform(

@@ -35,11 +35,11 @@ class PdfLineError(ValueError):
     """Raised for a malformed pdf_line payload (-> parse_failure tally)."""
 
 
-# the ONE definition of the coordinate-magnitude grammar bound:
-# operators/pdf_parse.py (vectorized digit-length reject) and
-# plans/pipeline.py (paged-path page-field regexp) both import it, so
-# the three grammars cannot drift apart (values < 10^15 < 2^53 stay
-# exactly representable in the vectorized arm's float64 fallback)
+# the ONE definition of the coordinate-magnitude grammar bound: the
+# paged path's page-field regexp (plans/pipeline.py) imports it, so the
+# page a line is grouped by and the page parse_line reads cannot drift
+# apart. The bound is output-visible (a 16-digit coordinate is a parse
+# failure) and keeps every accepted page inside a Spark long.
 COORD_MAX_DIGITS = 15
 _COORD_RE = re.compile(r"[+-]?[0-9]{1,%d}\Z" % COORD_MAX_DIGITS)
 
@@ -50,18 +50,14 @@ def parse_line(payload: str) -> tuple[int, int, int, int, int, str]:
     Coordinates must match the FIXTURES.md grammar exactly: ASCII
     digits with one optional sign. A bare ``int(p)`` would silently
     accept whitespace padding, ``1_0`` underscores, and non-ASCII
-    unicode digits — all of which the vectorized Spark arm
-    (operators/pdf_parse.py to_numeric + charset reject) treats as
-    malformed; the regex pins the oracle to the same grammar so the
-    two sides cannot disagree on junk coordinates.
+    unicode digits, none of which the paged path's JVM page-field
+    regexp accepts; the regex pins one grammar for both.
 
-    Magnitude is bounded at 15 digits (values < 10^15 < 2^53): the
-    vectorized arm holds coordinates as float64 whenever any row in
-    the batch coerced to NaN, so an accepted value must be exactly
-    representable in float64 — an unbounded grammar lets integers
-    above 2^53 pass both sides with different values (r4 ADVICE).
-    Real coordinates are PDF points x100 (< 10^7); both grammars
-    reject the pathological tail identically."""
+    Magnitude is bounded at 15 digits (values < 10^15): the paged path
+    groups lines by the page field cast to a Spark long, so every
+    accepted page must fit one, and the bound is part of the output
+    contract (a longer field is a parse failure). Real coordinates
+    are PDF points x100 (< 10^7)."""
     head, sep, text = payload.partition("|")
     if not sep:
         raise PdfLineError("missing '|' separator")

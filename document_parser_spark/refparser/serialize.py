@@ -29,15 +29,14 @@ from document_parser_spark.config import (
 
 _PAGE_BREAK = object()
 
-# media_ref grammars are STRICT (ASCII digits, one optional sign) and
-# shared verbatim with the vectorized arm — the same contract as the
-# pdf coordinate grammar: a bare int() accepts whitespace, underscores
-# and unicode digits that a regex-driven vectorized twin cannot
-# replicate exactly, so both sides pin the regex (review-caught: the
-# two arms previously disagreed on 'h7', 'li:o', 'li:o:1:x', float
-# depths). Depth is clamped to [0, 100]: the indent string is
-# depth-proportional, and an unbounded hostile media_ref would
-# otherwise allocate gigabytes ('li:u:999999999').
+# media_ref grammars are STRICT (ASCII digits, one optional sign), like
+# the pdf coordinate grammar: a bare int() would accept whitespace,
+# underscores and unicode digits. The grammar is output-visible ('h7',
+# 'li:o', 'li:o:1:x' and float depths render the fallback), so it stays
+# fixed, and a regexp form of it reproduces it exactly. Depth is
+# clamped to [0, 100]: the indent string is depth-proportional, and an
+# unbounded hostile media_ref would otherwise allocate gigabytes
+# ('li:u:999999999').
 _HEADING_REF_RE = re.compile(r"^h([+-]?[0-9]{1,9})$")
 _LIST_REF_RE = re.compile(r"^([^:]*):([^:]*):([+-]?[0-9]{1,9})$")
 LIST_DEPTH_MAX = 100
@@ -83,12 +82,10 @@ def serialize_markdown(
     """Ordered output spans ``[(kind, text, media_ref)]`` -> markdown string."""
     chunks: list = []  # (kind, rendered) | _PAGE_BREAK
     for kind, text, media_ref in spans:
-        # NULL fields render as empty strings — the vectorized arm's
-        # fillna('') rule. In-pipeline spans never carry NULLs after
-        # reassembly, but the two arms must agree (not crash apart) on
-        # any schema-valid input (review-caught: heading/list_item with
-        # a NULL media_ref raised TypeError here while serialize_batch
-        # rendered the fallback).
+        # NULL fields render as empty strings. In-pipeline spans never
+        # carry NULLs after reassembly, but the serializer UDF must not
+        # crash on any schema-valid input (review-caught: heading/
+        # list_item with a NULL media_ref raised TypeError here).
         text = text if text is not None else ""
         media_ref = media_ref if media_ref is not None else ""
         if kind == "page_break":

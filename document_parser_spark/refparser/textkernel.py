@@ -1,8 +1,9 @@
 """Pure-Python oracle for the reference's scalar text kernel.
 
-Single-string, readable, deliberately non-vectorized: this module DEFINES the
-correctness contract; the Spark pipeline re-implements it vectorized and the
-golden tests assert exact equality between the two.
+Single-string and readable: this module DEFINES the correctness contract,
+and the Spark pipeline's Python arms call these functions directly (the JVM
+arm's translate chain covers the rows that need no /uni or mojibake step;
+golden tests assert exact equality).
 
 Reference parity (file:line into /root/reference):
   - clean_text pipeline & ordering: app/modules/parser/abc/abc.py:71-109

@@ -17,6 +17,7 @@ from __future__ import annotations
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from document_parser_spark.config import CELL_SEP, ROW_SEP
 from document_parser_spark.refparser.parse import parse_document
@@ -59,32 +60,63 @@ GRAMMAR_CASES = {
     "max-15d": [("pdf_line", "1;2;999999999999999;4;5|ok15", "", 0)],
 }
 
+# -- regression: a doc's pdf lines are laid out in OFFSET order, as the
+#    oracle sorts them, whatever their order in the spans array
 
-def _run_cases(spark, cases):
-    rows = [(name, spans) for name, spans in cases.items()]
+ORDER_CASES = {
+    # equal coordinates: the layout sort keeps input order -> "B A"
+    "tied-coords": [("pdf_line", "1;1000;8000;9000;9000|A", "", 1),
+                    ("pdf_line", "1;1000;8000;9000;9000|B", "", 0)],
+    # the VLM joins a page's lines in input order -> "B\nA"
+    "vlm-order": [("pdf_line", "1;1000;8000;9000;9000|A", "", 5),
+                  ("pdf_line", "1;1000;6000;9000;7000|B", "", 2)],
+}
+
+# the three pdf plan shapes: the doc-level layout stage, every doc tagged
+# giant (per-page layout stage + CASE-salted reassembly), the VLM arm
+PDF_MODES = ["doc", "paged", "vlm"]
+
+
+def _extract_vs_oracle(spark, rows, mode="doc"):
+    """extract() of (doc_id, spans) rows in one pdf plan shape ->
+    {doc_id: (got, want)}, each (spans, markdown, status, n_failures)."""
+    from document_parser_spark.config import GIANT_SIZE_BUCKET
     from document_parser_spark.plans.pipeline import extract
 
     df = spark.createDataFrame(rows, SPAN_SCHEMA)
+    if mode == "paged":
+        df = df.withColumn("size_bucket", F.lit(GIANT_SIZE_BUCKET))
+    vlm = mode == "vlm"
     got = {
         r["doc_id"]: (
             [(s["kind"], s["text"], s["media_ref"], s["offset"])
              for s in r["spans"]],
             r["markdown"], r["status"], r["n_failures"],
         )
-        for r in extract(df).collect()
+        for r in extract(df, pdf_vlm=vlm).collect()
     }
-    for name, spans in cases.items():
-        want = parse_document(name, spans)
-        assert got[name] == (want.spans, want.markdown, want.status,
-                             want.n_failures), name
+    assert len(got) == len(rows)
+    out = {}
+    for doc_id, spans in rows:
+        want = parse_document(doc_id, spans, pdf_vlm=vlm)
+        out[doc_id] = (got[doc_id], (want.spans, want.markdown,
+                                     want.status, want.n_failures))
+    return out
+
+
+def _run_cases(spark, cases, mode="doc"):
+    for name, (got, want) in _extract_vs_oracle(
+            spark, list(cases.items()), mode).items():
+        assert got == want, name
 
 
 def test_null_payload_parity(spark):
     _run_cases(spark, NULL_CASES)
 
 
-def test_pdf_coordinate_grammar_parity(spark):
-    _run_cases(spark, GRAMMAR_CASES)
+@pytest.mark.parametrize("mode", PDF_MODES)
+def test_pdf_coordinate_grammar_parity(spark, mode):
+    _run_cases(spark, {**GRAMMAR_CASES, **ORDER_CASES}, mode)
 
 
 def test_grammar_cases_fail_as_expected():
@@ -156,27 +188,13 @@ _doc_spans = st.lists(_span, min_size=1, max_size=6).flatmap(
                         for (k, t, m), o in zip(spans, offs)]))
 
 
-@pytest.mark.usefixtures("spark")
+@pytest.mark.parametrize("mode", PDF_MODES)
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 @given(docs=st.lists(_doc_spans, min_size=1, max_size=4))
-def test_fuzz_extract_matches_oracle(spark, docs):
-    from document_parser_spark.plans.pipeline import extract
-
+def test_fuzz_extract_matches_oracle(spark, mode, docs):
     rows = [(f"d{i}", spans) for i, spans in enumerate(docs)]
-    df = spark.createDataFrame(rows, SPAN_SCHEMA)
-    got = {
-        r["doc_id"]: (
-            [(s["kind"], s["text"], s["media_ref"], s["offset"])
-             for s in r["spans"]],
-            r["markdown"], r["status"], r["n_failures"],
-        )
-        for r in extract(df).collect()
-    }
-    assert len(got) == len(rows)
-    for doc_id, spans in rows:
-        want = parse_document(doc_id, spans)
-        assert got[doc_id] == (
-            want.spans, want.markdown, want.status, want.n_failures), (
-            doc_id, spans)
+    for doc_id, (got, want) in _extract_vs_oracle(spark, rows,
+                                                  mode).items():
+        assert got == want, (doc_id, dict(rows)[doc_id])

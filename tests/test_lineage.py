@@ -239,7 +239,8 @@ def test_crash_between_lineage_rows_restart(spark, result, out_dir,
 def test_extract_cli_restart_counts_only_this_runs_docs(spark, tmp_path):
     """bin/extract.py run twice over one output: the second run skips
     every READY bucket, so its throughput covers the docs it committed
-    (none), not the whole output table."""
+    (none), not the whole output table. With nothing to commit it does
+    not read the input at all: it is deleted before the second run."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     inp, out = str(tmp_path / "in"), str(tmp_path / "out")
     fixtures_dataframe(spark).write.parquet(inp)
@@ -254,7 +255,9 @@ def test_extract_cli_restart_counts_only_this_runs_docs(spark, tmp_path):
         assert res.returncode == 0, res.stderr[-2000:]
         return json.loads(res.stdout.strip().splitlines()[-1])
 
-    first, second = run(), run()
+    first = run()
+    shutil.rmtree(inp)
+    second = run()
     assert first["buckets_committed"] == 4
     assert first["docs_per_sec"] > 0
     assert second["buckets_committed"] == 0

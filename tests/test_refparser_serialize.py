@@ -70,12 +70,12 @@ class TestBlocks:
 
 
 class TestArmsParity:
-    """Vectorized serialize_batch vs the oracle on hostile media_ref
-    grammars and empty chunks (review-caught: the arms disagreed on
-    'h7', 'li:o', 'li:o:1:x', float depths, and dropped empty text
-    chunks that the oracle keeps as separator contributors). Both
-    sides now share the STRICT ref regexes and the table-only empty
-    skip."""
+    """The serializer UDF's batch wrapper (``serialize_batch``) vs the
+    oracle on hostile media_ref grammars, empty chunks and NULL fields:
+    it must hand each Arrow row's span dicts to ``serialize_markdown``
+    unchanged, NULLs included (review-caught when the wrapper was a
+    pandas twin: 'h7', 'li:o', 'li:o:1:x', float depths, dropped empty
+    text chunks)."""
 
     CASES = [
         [("heading", "T", "h7")], [("heading", "T", "h12")],

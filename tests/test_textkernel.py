@@ -7,7 +7,6 @@ U+FFFD (abc/abc.py:106), mojibake pairs (abc/abc.py:59-61 subset).
 
 import unicodedata
 
-import pytest
 from hypothesis import given
 from hypothesis import strategies as st
 
@@ -160,59 +159,18 @@ class TestDocxAsymmetry:
 
 
 class TestVectorizedKernelParity:
-    """pandas batch kernels == the single-string oracle on the same
-    adversarial strings (the docx/table tier of the cleaning goldens)."""
+    """The table-clean pandas UDF maps the oracle kernel over its
+    Series; NULL payloads stay NULL."""
 
-    CASES = [
-        "Café plain",
-        "mojibake Ã© text",
-        "/uni0416 and � and nbsp",
-        "",
-        "   ",
-    ]
-
-    def test_docx_clean_series(self):
-        import pandas as pd
-
+    def test_table_clean_series_nan_safe(self, spark):
         from document_parser_spark.functions.cleaning import (
-            docx_clean_series,
+            make_table_clean_udf,
         )
-        from document_parser_spark.refparser.textkernel import (
-            docx_clean_and_fix,
-        )
-        got = docx_clean_series(pd.Series(self.CASES, dtype="object"))
-        assert list(got) == [docx_clean_and_fix(c) for c in self.CASES]
-
-    @pytest.mark.parametrize("fix_cells", [False, True])
-    def test_table_clean_series(self, fix_cells):
-        import pandas as pd
-
-        from document_parser_spark.functions.cleaning import (
-            table_clean_series,
-        )
-        from document_parser_spark.refparser.textkernel import (
-            clean_table_payload,
-        )
-        payloads = [
-            "a\x1fb\x1ec\x1fd",
-            "céll\x1fÃ©\x1e�\x1f/uni0041",
-            "single",
-            "",
-        ]
-        got = table_clean_series(pd.Series(payloads, dtype="object"),
-                                 fix_cells)
-        assert list(got) == [clean_table_payload(p, fix_cells)
-                             for p in payloads]
-
-    def test_table_clean_series_nan_safe(self):
-        import pandas as pd
-
-        from document_parser_spark.functions.cleaning import (
-            table_clean_series,
-        )
-        s = pd.Series([None, "a\x1fb"], dtype="object")
-        out = table_clean_series(s, fix_cells=True)
-        assert out[0] is None and out[1] == "a\x1fb"
+        df = spark.createDataFrame([(0, None), (1, "a\x1fÃ©")],
+                                   "id int, t string")
+        out = {r.id: r.c for r in df.select(
+            "id", make_table_clean_udf(True)("t").alias("c")).collect()}
+        assert out == {0: None, 1: "a\x1fé"}
 
 
 class TestNeedsPythonColumn:
