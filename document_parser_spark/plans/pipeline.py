@@ -152,15 +152,16 @@ def _python_parse_branch(src: DataFrame) -> DataFrame:
         })
 
     def _html(grp: pd.DataFrame) -> pd.DataFrame:
-        blocks = parse_html_rows(grp["text"].reset_index(drop=True))
+        # one row per html_blocks block: ord0 = the span's offset,
+        # ord1 = the block's index in its doc
+        blocks = parse_html_rows(grp["text"])
         if blocks.empty:
             return blocks
-        ord1 = blocks.groupby("row", sort=False).cumcount()
         idx = blocks["row"].to_numpy()
         return pd.DataFrame({
             "doc_id": grp["doc_id"].to_numpy()[idx],
             "ord0": grp["offset"].to_numpy()[idx].astype("int32"),
-            "ord1": ord1.to_numpy().astype("int32"),
+            "ord1": blocks["seq"].to_numpy().astype("int32"),
             "kind": blocks["kind"].to_numpy(),
             "text": blocks["text"].to_numpy(),
             "media_ref": blocks["media_ref"].to_numpy(),

@@ -1,6 +1,6 @@
 """Pure-Python oracle for HTML -> content blocks.
 
-Defines the contract the Spark ``parse_html_batch`` kernel must match exactly:
+Defines the contract the Spark ``html_blocks`` kernel must match exactly:
 a Readability-style main-content extractor. Reference parity: the reference
 delegates HTML to Docling's converter (app/modules/parser/v1/file_parsers/
 html_parser.py:37) and then walks TextItem/TableItem/PictureItem in reading
@@ -244,6 +244,14 @@ class _Extractor:
             self._flush_run()
 
 
+def tree_blocks(root: _Node) -> list[tuple[str, str, str]]:
+    """A built tree -> its ordered main-content blocks."""
+    extractor = _Extractor()
+    extractor._walk(root)
+    extractor._flush_run()
+    return extractor.blocks
+
+
 def parse_html(html: str) -> list[tuple[str, str, str]]:
     """HTML document/fragment -> ordered main-content blocks
     ``[(kind, text, media_ref), ...]``. Never raises on malformed input."""
@@ -253,7 +261,4 @@ def parse_html(html: str) -> list[tuple[str, str, str]]:
         builder.close()
     except Exception:
         pass  # emit whatever tree was built before the error
-    extractor = _Extractor()
-    extractor._walk(builder.root)
-    extractor._flush_run()
-    return extractor.blocks
+    return tree_blocks(builder.root)

@@ -2,8 +2,14 @@ import os
 import sys
 
 import pytest
+from hypothesis import settings
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# A failing fuzz example prints its @reproduce_failure blob, so it can be
+# replayed even when the example database (.hypothesis/) is gone.
+settings.register_profile("reproducible", print_blob=True)
+settings.load_profile("reproducible")
 
 
 @pytest.fixture(scope="session")
