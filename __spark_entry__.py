@@ -1052,9 +1052,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """J1 proper: the OCR insert-after operator on a derived span
         table — verifies splice position, offset renumbering, and the
         sha256 stub against a pure-SQL oracle."""
-        from document_parser_spark.operators.enrich import (
-            insert_ocr_after_images,
-        )
+        from document_parser_spark.operators import enrich, service
+        _ensure_pkg(spark)
         docs = _tbl(spark, sf, "documents")
         spans0 = F.expr("""
             transform(
@@ -1075,7 +1074,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     F.when(F.pmod("doc_id", F.lit(3)) == 0,
                            F.concat("spans0", F.array(img)))
                     .otherwise(F.col("spans0")).alias("spans")))
-        enriched = insert_ocr_after_images(span_docs)
+        enriched = enrich.insert_ocr_after_images(
+            span_docs, service.BatchedService(service.ocr_service_fn))
         return enriched.select(
             "doc_id",
             F.size("spans").cast("long").alias("n_spans"),

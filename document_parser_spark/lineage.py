@@ -174,6 +174,10 @@ def run_with_lineage(spark: SparkSession, result: DataFrame, out_dir: str,
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read back the committed output (all READY buckets)."""
-    return spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, f"{BUCKET_COL}=*"))
+    """Read back the committed output (all READY buckets). The bucket
+    dirs are listed here: Spark probes a single path for a stream
+    sink's ``_spark_metadata``, and a glob fails that probe with a
+    warning. With no bucket dir the glob goes through and raises."""
+    pattern = os.path.join(out_dir, f"{BUCKET_COL}=*")
+    dirs = sorted(glob.glob(pattern)) or [pattern]
+    return spark.read.option("basePath", out_dir).parquet(*dirs)

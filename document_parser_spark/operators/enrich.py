@@ -3,136 +3,131 @@ F7), and language autodetection (A2) — SURVEY §3.2.
 
 Reference behavior re-expressed Spark-first:
 
-* J1 (pdf_parser.py:64-71): for each PictureItem the reference calls a
-  VLM and splices the OCR text into the tree *immediately after* the
-  image. Here the insertion happens on the reassembled span array with
-  ``transform`` + ``flatten`` — a narrow map, no join and no extra
-  shuffle, because by this point each document's spans are already one
-  ordered array. (The join formulation on (doc_id, pos) exists as the
-  driver query ``j1_enrichment_join`` for the general case where OCR
-  results arrive as a separate relation.)
+* J1 (pdf_parser.py:64-71): for each PictureItem or TableItem the
+  reference calls a VLM and splices the OCR text into the tree
+  *immediately after* the element. Here the splice happens on the
+  reassembled span array in one Arrow-batched map — no join and no
+  extra shuffle, because by this point each document's spans are
+  already one ordered array. (The join formulation on (doc_id, pos)
+  exists as the driver query ``j1_enrichment_join`` for the general
+  case where OCR results arrive as a separate relation.)
 * J2 (translator/v1/service.py:95-107): per-element translation zipped
-  back positionally. In-place ``transform`` over the span array; the
-  F7 backtick sanitization (service.py:99) is applied to the
-  translated text only, exactly like the reference.
+  back positionally, in place; the F7 backtick sanitization
+  (service.py:99) is the translator's job, applied to translated text
+  only, exactly like the reference.
 * A2 (translator/v1/service.py:57-72): language = heuristic over the
   first 3 non-empty text spans.
 
-External services (VLM, translator, detector) are deterministic
-pluggable stubs: pure column expressions, seeded by content — swap
-the expression for a per-partition HTTP batch later without touching
-the plan shape.
+J1 and J2 call the ``operators.service.BatchedService`` they take as
+an argument: ``plans.pipeline.extract`` wires in the deterministic
+stubs, a deployment an HTTP batch call. A2 is a column expression.
 """
 
 from __future__ import annotations
 
+from typing import Callable, Iterator
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from document_parser_spark.operators.service import BatchedService
 from document_parser_spark.ops.textstats import (
     LANG_ORDER,
     STOPWORDS,
     lang_argmax,
 )
 
-OCR_PREFIX = "[ocr:"
-# The reference's OCR failure semantics (image_parser.py:174-182): a
-# generic exception during per-element image parsing yields a FIXED
-# fallback string spliced into the document (not an empty string, not
-# a failure row). Ours is English; the reference's is Russian prose.
-OCR_FALLBACK_TEXT = "*image parsing hit a network delay*"
-
-
-def ocr_stub(seed: Column, fail_marker: str | None = None) -> Column:
-    """Deterministic fake VLM output for a media ref / table payload
-    (sha2-derived, so golden tests are stable). Empty/whitespace
-    output never happens by construction — the reference's P4 guard is
-    kept in the caller. ``fail_marker`` makes the stub
-    failure-injectable: seeds containing the marker take the
-    reference's fallback-string path (image_parser.py:174-182)."""
-    ok = F.concat(F.lit(OCR_PREFIX),
-                  F.substring(F.sha2(seed, 256), 1, 12), F.lit("]"))
-    if fail_marker is None:
-        return ok
-    return F.when(seed.contains(fail_marker),
-                  F.lit(OCR_FALLBACK_TEXT)).otherwise(ok)
-
-
-def insert_ocr_after_images(docs: DataFrame,
-                            spans_col: str = "spans",
-                            include_tables: bool = True,
-                            fail_marker: str | None = None) -> DataFrame:
-    """J1: splice an OCR text span immediately after every image span
-    — and, matching the reference's ``PictureItem OR TableItem``
-    condition (pdf_parser.py:64-71), after every table span — then
-    renumber offsets 0..n-1. Narrow map over the span array.
-
-    Table OCR seeds on the table payload (the reference renders the
-    table to an image via ``element.get_image``; our deterministic
-    stand-in hashes the content instead). ``include_tables=False``
-    restricts to images. ``fail_marker`` injects the reference's
-    OCR-failure fallback string (see ``ocr_stub``)."""
-    def is_target(s):
-        img = (s["kind"] == "image") & (F.length(s["media_ref"]) > 0)
-        if not include_tables:
-            return img
-        return img | (s["kind"] == "table")
-
-    def seed(s):
-        return F.when(F.length(s["media_ref"]) > 0, s["media_ref"]) \
-                .otherwise(F.coalesce(s["text"], F.lit("")))
-
-    enriched = F.flatten(F.transform(
-        F.col(spans_col),
-        lambda s: F.when(
-            is_target(s),
-            F.array(
-                s,
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    ocr_stub(seed(s), fail_marker).alias("text"),
-                    F.lit("").alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ),
-        ).otherwise(F.array(s)),
-    ))
-    renumbered = F.transform(
-        enriched,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"), s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset")))
-    return docs.withColumn(spans_col, renumbered)
-
-
-def translate_stub(text: Column) -> Column:
-    """Deterministic fake translator: uppercases (so goldens can see
-    the stage ran) then applies the reference's backtick sanitization
-    (F7, translator/v1/service.py:99: translated.replace('`', '*'))."""
-    return F.translate(F.upper(text), "`", "*")
-
-
 TRANSLATED_KINDS = ("text", "heading", "list_item", "table")
 
 
-def translate_spans(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """J2: translate text-bearing spans in place (text items + table
-    cells, mirroring the reference's two translated element classes;
-    images/code/page breaks pass through untouched)."""
-    kinds = F.array(*[F.lit(k) for k in TRANSLATED_KINDS])
-    translated = F.transform(
-        F.col(spans_col),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            F.when(F.array_contains(kinds, s["kind"]),
-                   translate_stub(s["text"]))
-            .otherwise(s["text"]).alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset")))
-    return docs.withColumn(spans_col, translated)
+def _splice_via_service(
+        docs: DataFrame, service: BatchedService,
+        payload_of: Callable[[dict], str | None],
+        rebuild: Callable[[list[dict], Iterator[tuple[str, bool]]],
+                          list[dict]]) -> DataFrame:
+    """The one service loop of J1 and J2: a ``mapInPandas`` over the
+    docs. Per Arrow batch: skip it if empty, gather ``payload_of(span)``
+    for every span where that is not None (a NULL spans array passes
+    through as NULL), make ONE service call for the whole batch
+    (chunked and concurrent inside :class:`BatchedService`, so the
+    per-request overhead amortizes across documents), then
+    ``rebuild(spans, answers)`` each doc, where ``answers`` yields the
+    service's ``(result, ok)`` per payload in gather order. The span
+    dicts are the batch's own, so ``rebuild`` may edit them."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            payloads = [p for spans in pdf["spans"] if spans is not None
+                        for s in spans if (p := payload_of(s)) is not None]
+            answers = zip(*service(payloads))
+            pdf["spans"] = [None if spans is None
+                            else rebuild(list(spans), answers)
+                            for spans in pdf["spans"]]
+            yield pdf
+
+    return docs.mapInPandas(run, schema=docs.schema)
 
 
-def detect_language(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+def _ocr_payload(s) -> str | None:
+    """The reference's ``PictureItem OR TableItem`` condition
+    (pdf_parser.py:64-71): an image with a media_ref, or any table.
+    Table OCR seeds on the table payload (the reference renders the
+    table to an image via ``element.get_image``; the stub hashes the
+    content instead)."""
+    if (s["kind"] == "image" and s["media_ref"]) or s["kind"] == "table":
+        return s["media_ref"] or s["text"] or ""
+    return None
+
+
+def _ocr_rebuild(spans, answers):
+    out = []
+    for s in spans:
+        out.append(s)
+        if _ocr_payload(s) is not None:
+            # a failed chunk already carries the service's fallback
+            # string (image_parser.py:174-182), never a failure row
+            text, _ok = next(answers)
+            out.append({"kind": "text", "text": text, "media_ref": ""})
+    for i, s in enumerate(out):
+        s["offset"] = i
+    return out
+
+
+def insert_ocr_after_images(docs: DataFrame,
+                            service: BatchedService) -> DataFrame:
+    """J1: splice the service's OCR text span immediately after every
+    image span with a media_ref and every table span, then renumber
+    offsets 0..n-1."""
+    return _splice_via_service(docs, service, _ocr_payload, _ocr_rebuild)
+
+
+def _translate_payload(s) -> str | None:
+    return s["text"] if s["kind"] in TRANSLATED_KINDS else None
+
+
+def _translate_rebuild(spans, answers):
+    for s in spans:
+        if _translate_payload(s) is not None:
+            text, ok = next(answers)
+            # a failed chunk KEEPS THE SOURCE TEXT: the A4 fallback of
+            # an in-place rewrite is pass-through, not the service's
+            # fixed fallback string (OCR-error prose)
+            if ok:
+                s["text"] = text
+    return spans
+
+
+def translate_spans(docs: DataFrame, service: BatchedService) -> DataFrame:
+    """J2: translate text-bearing spans in place through the service
+    (text items + table cells, mirroring the reference's two translated
+    element classes; images, code, page breaks and NULL texts pass
+    through untouched)."""
+    return _splice_via_service(docs, service, _translate_payload,
+                               _translate_rebuild)
+
+
+def detect_language(docs: DataFrame) -> DataFrame:
     """A2: sample = first 3 non-empty text spans joined by newline (the
     reference's detect-language payload, translator/v1/service.py:57-64),
     scored by the stopword heuristic -> ``lang`` column. Array-only:
@@ -147,7 +142,7 @@ def detect_language(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
         "\n",
         F.slice(
             F.transform(
-                F.filter(F.col(spans_col),
+                F.filter(F.col("spans"),
                          lambda s: (s["kind"] == "text")
                          & (F.trim(s["text"]) != "")),
                 lambda s: s["text"]),

@@ -30,7 +30,7 @@ from document_parser_spark.refparser.pdf import (
 from document_parser_spark.schema import FAIL_KIND, PARSED_SCHEMA
 
 
-def _parse_docs(doc_ids, spans_col, kernel) -> pd.DataFrame:
+def _parse_docs(doc_ids, span_lists, kernel) -> pd.DataFrame:
     """(doc_id, pdf-only spans in offset order) -> PARSED_SCHEMA rows:
     the kernel's blocks at ord1 0.., then one ``__fail__`` row per
     failure at a DISTINCT negative ord1 -(f+1) (the reassembly salt
@@ -38,7 +38,7 @@ def _parse_docs(doc_ids, spans_col, kernel) -> pd.DataFrame:
     of a doc into one salt bucket). Every row is anchored at the doc's
     least non-NULL offset, 0 when all are NULL (never throw, A4)."""
     rows = []
-    for doc_id, spans in zip(doc_ids, spans_col):
+    for doc_id, spans in zip(doc_ids, span_lists):
         anchor = min((sp["offset"] for sp in spans
                       if sp["offset"] is not None), default=0)
         blocks, n_fail = kernel([sp["text"] or "" for sp in spans])
@@ -50,9 +50,9 @@ def _parse_docs(doc_ids, spans_col, kernel) -> pd.DataFrame:
         {"ord0": "int32", "ord1": "int32"})
 
 
-def parse_pdf_batch(doc_ids, spans_col) -> pd.DataFrame:
+def parse_pdf_batch(doc_ids, span_lists) -> pd.DataFrame:
     """The layout kernel over a batch of docs (see ``_parse_docs``)."""
-    return _parse_docs(doc_ids, spans_col, parse_pdf_lines)
+    return _parse_docs(doc_ids, span_lists, parse_pdf_lines)
 
 
 def _doc_branch(docs_df, kernel):

@@ -1,4 +1,4 @@
-"""Pluggable external-service seam for the enrichment stages.
+"""The external-service slot of the enrichment stages.
 
 The reference calls live services per element with bounded concurrency:
 the VLM image parser runs its requests through a concurrency=3 slot
@@ -6,23 +6,23 @@ the VLM image parser runs its requests through a concurrency=3 slot
 semaphore (translator/v1/service.py:27). This module is that boundary
 re-expressed for Spark: a **per-partition batched callable** with
 bounded concurrency, a timeout, and the A4 failure posture (an
-errored/timed-out batch yields fallback rows, never a task failure).
+errored, timed-out or malformed batch yields fallback rows, never a
+task failure).
 
-Hermeticity (SURVEY §7.0) is preserved: nothing here does IO — the
-deterministic stubs (`ocr_service_fn`, `translate_service_fn`)
-reproduce the pure-column expressions in ``operators.enrich`` exactly
-(same sha2-derived OCR token, same uppercase+backtick translation), so
-the oracle rows are unchanged whichever path runs. A production
-deployment swaps the ``fn`` for an HTTP batch call and touches nothing
-else: the plan shape, batching, concurrency bound, and failure
-semantics all live on this side of the seam.
+Hermeticity (SURVEY §7.0) is preserved: nothing here does IO. The
+deterministic stubs (``ocr_service_fn``, ``translate_service_fn``)
+are what ``plans.pipeline.extract`` wires into the slot; the
+enrichment stages (``operators.enrich.insert_ocr_after_images`` /
+``translate_spans``) take the :class:`BatchedService` as an argument,
+so a deployment passes one around an HTTP batch call instead and
+touches nothing else: batching, concurrency bound and failure
+semantics all live on this side of the slot.
 
 Scale notes: the service call runs INSIDE the executor task (one
-thread pool per partition, ``concurrency`` in-flight batches), so
+thread pool per Arrow batch, ``concurrency`` in-flight chunks), so
 total in-flight requests across the cluster = partitions x
 concurrency — size partitions to the service's rate limit, exactly
-the knob the reference's semaphore provides per process. The spliced
-relation is a narrow map over the reassembled docs: no extra shuffle.
+the knob the reference's semaphore provides per process.
 """
 
 from __future__ import annotations
@@ -30,26 +30,27 @@ from __future__ import annotations
 import hashlib
 import queue
 import threading
-from typing import Callable, Iterator, Sequence
+from typing import Callable, Sequence
 
-import pandas as pd
-
-from document_parser_spark.operators.enrich import (
-    OCR_FALLBACK_TEXT,
-    TRANSLATED_KINDS,
-)
+OCR_PREFIX = "[ocr:"
+# The reference's OCR failure semantics (image_parser.py:174-182): a
+# generic exception during per-element image parsing yields a FIXED
+# fallback string spliced into the document (not an empty string, not
+# a failure row). Ours is English; the reference's is Russian prose.
+OCR_FALLBACK_TEXT = "*image parsing hit a network delay*"
 
 
 class BatchedService:
     """A bounded-concurrency, timeout-guarded batch-call slot.
 
     ``fn``: the service — takes a list of payload strings, returns the
-    same-length list of results. Called on chunks of ``batch_size``
+    same-length list of result strings. Called on chunks of ``batch_size``
     payloads, at most ``concurrency`` chunks in flight (DAEMON worker
     threads per call — requests overlap IO exactly like the
     reference's concurrency=3 VLM slot, and a hung call can never
     block Python-worker exit the way concurrent.futures' atexit join
     would). A chunk whose call raises or exceeds ``timeout_s``
+    (or answers with the wrong length or a non-``str`` element)
     resolves to ``fallback`` for every payload in it and is reported
     failed — the A4 posture (the reference splices a fixed fallback
     string on OCR errors, image_parser.py:174-182).
@@ -118,8 +119,12 @@ class BatchedService:
                     return
                 try:
                     res = list(self.fn(chunks[i]))
-                    if len(res) != len(chunks[i]):
-                        raise ValueError("service returned wrong length")
+                    # a malformed response (None for a text, a JSON
+                    # object) would otherwise reach the Arrow writer
+                    # and fail the task, or blank a translated span
+                    if (len(res) != len(chunks[i])
+                            or not all(isinstance(r, str) for r in res)):
+                        raise ValueError("malformed service response")
                     buf[i] = res
                 except Exception:
                     buf[i] = None
@@ -167,121 +172,15 @@ class BatchedService:
 
 
 def ocr_service_fn(payloads: list[str]) -> list[str]:
-    """Deterministic stub service: byte-identical to the pure-column
-    ``enrich.ocr_stub`` ('[ocr:' + sha2(seed, 256)[:12] + ']') so the
-    service-backed path and the column path produce the same rows."""
-    return ["[ocr:" + hashlib.sha256(p.encode("utf-8")).hexdigest()[:12]
+    """Deterministic stub VLM: ``OCR_PREFIX`` + sha256(seed)[:12] +
+    ']' (content-seeded, so golden tests are stable; never empty, so
+    the reference's P4 empty-output guard never fires)."""
+    return [OCR_PREFIX + hashlib.sha256(p.encode("utf-8")).hexdigest()[:12]
             + "]" for p in payloads]
 
 
 def translate_service_fn(payloads: list[str]) -> list[str]:
-    """Deterministic stub translator: identical to
-    ``enrich.translate_stub`` (uppercase, then the F7 backtick
-    sanitization — translator/v1/service.py:99)."""
+    """Deterministic stub translator: uppercase (so goldens can see
+    the stage ran), then the F7 backtick sanitization
+    (translator/v1/service.py:99: translated.replace('`', '*'))."""
     return [p.upper().replace("`", "*") for p in payloads]
-
-
-def ocr_via_service(docs, service: BatchedService,
-                    spans_col: str = "spans",
-                    include_tables: bool = True):
-    """Service-backed twin of ``enrich.insert_ocr_after_images``: for
-    every image span (and table span, matching the reference's
-    PictureItem-or-TableItem condition) splice the service's OCR text
-    immediately after it, then renumber offsets 0..n-1.
-
-    One ``mapInPandas`` pass over the reassembled docs; each Arrow
-    batch gathers ALL its target payloads into one service invocation
-    set (chunked + concurrent inside :class:`BatchedService`), so the
-    per-request overhead amortizes across documents — the reference
-    issues one request per element and throttles with the semaphore;
-    the batch seam is the Spark-shaped version of the same bound."""
-    fields = ["kind", "text", "media_ref", "offset"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            payloads: list[str] = []
-            for spans in pdf[spans_col]:
-                # NULL spans arrays pass through untouched, exactly
-                # like the column twin (F.transform(NULL) is NULL) —
-                # never-throw parity on the same input
-                for s in (spans if spans is not None else ()):
-                    if _is_ocr_target(s, include_tables):
-                        payloads.append(s["media_ref"] or s["text"] or "")
-            results, _ok = service(payloads)
-            it = iter(results)
-            new_col = []
-            for spans in pdf[spans_col]:
-                if spans is None:
-                    new_col.append(None)
-                    continue
-                out = []
-                for s in spans:
-                    out.append({f: s[f] for f in fields})
-                    if _is_ocr_target(s, include_tables):
-                        out.append({"kind": "text", "text": next(it),
-                                    "media_ref": "", "offset": s["offset"]})
-                for i, s in enumerate(out):
-                    s["offset"] = i
-                new_col.append(out)
-            out_pdf = pdf.copy()
-            out_pdf[spans_col] = new_col
-            yield out_pdf
-
-    return docs.mapInPandas(run, schema=docs.schema)
-
-
-def _is_ocr_target(s, include_tables: bool) -> bool:
-    if s["kind"] == "image" and s["media_ref"]:
-        return True
-    return include_tables and s["kind"] == "table"
-
-
-# the service twin must translate EXACTLY the kinds the column twin
-# does — shared constant, not a re-declaration that could drift
-_TRANSLATED = TRANSLATED_KINDS
-
-
-def translate_via_service(docs, service: BatchedService,
-                          spans_col: str = "spans"):
-    """Service-backed twin of ``enrich.translate_spans``: translate
-    text-bearing spans in place through the batched seam."""
-    fields = ["kind", "text", "media_ref", "offset"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # NULL text passes through untranslated, exactly like the
-            # column twin (F.upper(NULL) is NULL); NULL spans arrays
-            # pass through whole (F.transform(NULL) is NULL)
-            payloads = [s["text"] for spans in pdf[spans_col]
-                        for s in (spans if spans is not None else ())
-                        if s["kind"] in _TRANSLATED
-                        and s["text"] is not None]
-            results, ok = service(payloads)
-            # translation failure KEEPS THE SOURCE TEXT — the correct
-            # A4 fallback for an in-place rewrite is pass-through, not
-            # the service's fixed fallback string (which is OCR-error
-            # prose and would DESTROY the span text); the ok flags say
-            # which chunks resolved to the fallback
-            fixed = [r if k else p for r, k, p in zip(results, ok, payloads)]
-            it = iter(fixed)
-            new_col = []
-            for spans in pdf[spans_col]:
-                if spans is None:
-                    new_col.append(None)
-                    continue
-                out = []
-                for s in spans:
-                    d = {f: s[f] for f in fields}
-                    if s["kind"] in _TRANSLATED and s["text"] is not None:
-                        d["text"] = next(it)
-                    out.append(d)
-                new_col.append(out)
-            out_pdf = pdf.copy()
-            out_pdf[spans_col] = new_col
-            yield out_pdf
-
-    return docs.mapInPandas(run, schema=docs.schema)

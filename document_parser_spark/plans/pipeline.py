@@ -368,17 +368,16 @@ def extract(
     parsed = parse_all_branches(df, pdf_vlm=pdf_vlm, hot_ids=hot_ids)
     docs = reassemble(parsed, salt_buckets=salt_buckets,
                       salt_threshold=SALT_SPAN_THRESHOLD, hot_ids=hot_ids)
+    if parse_images or detect_lang or translate:
+        from document_parser_spark.operators import enrich, service
     if parse_images:
-        from document_parser_spark.operators.enrich import (
-            insert_ocr_after_images,
-        )
-        docs = insert_ocr_after_images(docs)
+        docs = enrich.insert_ocr_after_images(
+            docs, service.BatchedService(service.ocr_service_fn))
     if detect_lang:
-        from document_parser_spark.operators.enrich import detect_language
-        docs = detect_language(docs)
+        docs = enrich.detect_language(docs)
     if translate:
-        from document_parser_spark.operators.enrich import translate_spans
-        docs = translate_spans(docs)
+        docs = enrich.translate_spans(
+            docs, service.BatchedService(service.translate_service_fn))
     serialize_udf = make_serialize_udf(image_mode)
     out_cols = [
         F.col("doc_id"),

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from document_parser_spark.operators import enrich
+from document_parser_spark.operators import enrich, service
 from document_parser_spark.plans.pipeline import extract
 from document_parser_spark.schema import DOCUMENTS_IN_SCHEMA
 
@@ -39,7 +39,7 @@ def test_ocr_insert_after_images(spark, mixed):
                         for s in r.spans] for r in out.collect()}
     m1 = spans["m1"]
     assert [s[0] for s in m1] == ["text", "image", "text", "text"]
-    assert m1[2][1].startswith(enrich.OCR_PREFIX)  # right after the image
+    assert m1[2][1].startswith(service.OCR_PREFIX)  # right after the image
     assert [s[3] for s in m1] == [0, 1, 2, 3]      # offsets renumbered
     m2 = spans["m2"]
     assert [s[0] for s in m2] == ["image", "text", "image", "text"]
@@ -54,8 +54,9 @@ def test_ocr_insert_after_images(spark, mixed):
 def test_ocr_in_markdown(spark, mixed):
     md = {r.doc_id: r.markdown
           for r in extract(mixed, parse_images=True).collect()}
-    assert enrich.OCR_PREFIX in md["m1"]
-    assert md["m1"].index("<!-- image -->") < md["m1"].index(enrich.OCR_PREFIX)
+    assert service.OCR_PREFIX in md["m1"]
+    assert (md["m1"].index("<!-- image -->")
+            < md["m1"].index(service.OCR_PREFIX))
 
 
 def test_translate_in_place_and_backticks(spark):
@@ -110,17 +111,7 @@ def test_ocr_table_splice_matches_reference_condition(spark):
     out = extract(docs, parse_images=True)
     spans = [(s.kind, s.text) for s in out.head().spans]
     assert [k for k, _ in spans] == ["text", "table", "text", "text"]
-    assert spans[2][1].startswith(enrich.OCR_PREFIX)
-    # opt-out restores image-only behavior
-    from document_parser_spark.operators.enrich import (
-        insert_ocr_after_images,
-    )
-    from document_parser_spark.plans.pipeline import parse_all_branches
-    from document_parser_spark.operators.reassemble import reassemble
-    base = reassemble(parse_all_branches(docs))
-    img_only = insert_ocr_after_images(base, include_tables=False)
-    assert [s.kind for s in img_only.head().spans] == \
-        ["text", "table", "text"]
+    assert spans[2][1].startswith(service.OCR_PREFIX)
 
 
 def test_ocr_failure_fallback_string(spark):
@@ -130,16 +121,20 @@ def test_ocr_failure_fallback_string(spark):
         ("f1", [("image", "", "img://ok", 0),
                 ("image", "", "img://bad#timeout", 1)]),
     ])
-    from document_parser_spark.operators.enrich import (
-        insert_ocr_after_images,
-    )
-    from document_parser_spark.plans.pipeline import parse_all_branches
     from document_parser_spark.operators.reassemble import reassemble
+    from document_parser_spark.plans.pipeline import parse_all_branches
+
+    def vlm(chunk):
+        if any("#timeout" in c for c in chunk):
+            raise TimeoutError("vlm timed out")
+        return service.ocr_service_fn(chunk)
+
     base = reassemble(parse_all_branches(docs))
-    out = insert_ocr_after_images(base, fail_marker="#timeout")
+    out = enrich.insert_ocr_after_images(
+        base, service.BatchedService(vlm, batch_size=1))
     r = out.head()
     texts = [s.text for s in r.spans]
-    assert texts[1].startswith(enrich.OCR_PREFIX)          # ok image
-    assert texts[3] == enrich.OCR_FALLBACK_TEXT            # failed image
+    assert texts[1].startswith(service.OCR_PREFIX)         # ok image
+    assert texts[3] == service.OCR_FALLBACK_TEXT           # failed image
     assert [s.offset for s in r.spans] == [0, 1, 2, 3]
     assert r.n_failures == 0                               # NOT a fail row

@@ -8,7 +8,7 @@ COMPOSITION — parse -> reassemble -> OCR splice -> language detect ->
 translate -> serialize — had no randomized parity check. The oracle
 here models the deterministic stubs exactly:
 
-* J1 (``insert_ocr_after_images``, defaults as called by ``extract``):
+* J1 (``insert_ocr_after_images``, as called by ``extract``):
   after every image span with a non-empty media_ref AND every table
   span, insert ("text", "[ocr:" + sha256(seed)[:12] + "]", "") where
   seed = media_ref if non-empty else the span text; renumber offsets
@@ -24,10 +24,15 @@ here models the deterministic stubs exactly:
 * markdown re-serializes AFTER enrichment; status/n_failures follow
   the same rule as the base pipeline.
 
-The fuzz alphabet sticks to case-mapping-safe codepoints (ASCII +
-Latin-1 letters): Java's and Python's full Unicode case tables differ
-on exotic codepoints, and pinning which table is "right" is not part
-of the reference contract.
+J1 and J2 run Python (the stub services behind the BatchedService
+slot), so the oracle's ``str.upper`` is the translator's own case
+table. A2 runs Spark's ``lower``, ``trim`` and Java ``\\s`` split, and
+Java's and Python's full Unicode case tables differ on exotic
+codepoints; that is why the fuzz alphabet sticks to case-mapping-safe
+codepoints (ASCII + Latin-1 letters). The pinned edges below hold two
+codepoints that Spark's ``upper`` maps unlike ``str.upper``
+(U+019B, U+0264) and that the translator must keep Python's mapping
+for.
 """
 
 from __future__ import annotations
@@ -39,10 +44,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from document_parser_spark.operators.enrich import (
-    OCR_PREFIX,
-    TRANSLATED_KINDS,
-)
+from document_parser_spark.operators.enrich import TRANSLATED_KINDS
+from document_parser_spark.operators.service import OCR_PREFIX
 from document_parser_spark.ops.textstats import (
     EN_STOP_RATIO_MIN,
     LANG_ORDER,
@@ -65,8 +68,7 @@ def _ocr_text(seed: str) -> str:
 
 def oracle_insert_ocr(seq):
     """J1 model over output (kind, text, media_ref) triples —
-    enrich.insert_ocr_after_images with extract()'s defaults
-    (include_tables=True, fail_marker=None)."""
+    enrich.insert_ocr_after_images with extract()'s stub service."""
     out = []
     for kind, text, media_ref in seq:
         out.append((kind, text, media_ref))
@@ -172,6 +174,10 @@ EDGE_DOCS = {
     "html-img": [("html", "<p>before</p><img src='img://h'/>", "", 0)],
     # failure rows: unknown kind tallies, never reaches enrichment
     "fail-kind": [("blob", "x", "", 0), ("image", "", "img://z", 1)],
+    # Spark's upper maps U+019B and U+0264 unlike str.upper (to
+    # U+A7DC / U+A7CB): the translator keeps Python's case table
+    "case-text": [("text", "ƛ alpha", "", 0)],
+    "case-table": [("table", "ɤ\x1fb", "", 0)],
 }
 
 
